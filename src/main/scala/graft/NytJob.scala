@@ -13,7 +13,7 @@ import ops.{Ingest, JdbcSink, Streaming}
   * statesStep) over CSV drop directories into a date-partitioned parquet
   * sink, incrementally (the reference's every-15-minutes cron,
   * deploy/deploy.sh:29, becomes one `main` invocation per firing), with an
-  * optional JDBC upsert mirror of the reference's actual Postgres sink.
+  * optional JDBC mirror of the reference's actual Postgres sink.
   *
   * Usage: `runMain graft.NytJob <srcRoot> <sinkRoot> <checkpointRoot>
   * [jdbcUrl]` where `srcRoot/counties/` and `srcRoot/states/` hold the
@@ -25,9 +25,10 @@ import ops.{Ingest, JdbcSink, Streaming}
   * files, and the sink merge rewrites only the date partitions present in
   * the new batch (Streaming.ingestAvailableNow) — at years of history and
   * a 15-minute cadence the job stays constant-size. The optional JDBC
-  * mirror upserts ONLY the same touched partitions, read back from the
-  * freshly merged sink (ON CONFLICT DO NOTHING parity via
-  * JdbcSink.upsertJdbc).
+  * mirror replaces ONLY the same touched dates with the freshly merged
+  * sink's rows for them (JdbcSink.replaceDates). That is the reference's
+  * ON CONFLICT DO NOTHING result: the merge has already let stored rows
+  * win, so the sink's slice is what DO NOTHING would leave in the table.
   *
   * Deliberate fixes vs the reference (SURVEY.md §1.6): correct date
   * parsing (no month off-by-one), true NULL fips (no -1 sentinel),
@@ -40,7 +41,12 @@ object NytJob {
   private val tiebreak = Seq(col("cases").asc, col("deaths").asc)
 
   final case class Feed(name: String, schema: org.apache.spark.sql.types.StructType,
-                        keys: Seq[String], jdbcTable: String, ddl: String)
+                        keys: Seq[String], jdbcTable: String, ddl: String) {
+    /** The mirror table plus its `date` index, which keeps each firing's
+      * delete O(touched dates) as the mirror grows. */
+    def mirrorDdl: Seq[String] =
+      Seq(ddl, s"CREATE INDEX ${jdbcTable}_date ON $jdbcTable (date)")
+  }
 
   /** The two NYT feeds, in the reference's execution order (.kt:70-74:
     * counties first, then states). DDL mirrors schema.sql minus
@@ -74,16 +80,14 @@ object NytJob {
         checkpoint = s"$checkpointRoot/${f.name}",
         sinkPath = s"$sinkRoot/${f.name}")
       jdbcUrl.filter(_ => touched.nonEmpty).foreach { url =>
-        JdbcSink.initSchema(url, Seq(f.ddl))
-        // mirror ONLY this firing's partitions to the DB (partition-pruned
-        // read of the freshly merged sink) — upsert is idempotent, so rows
-        // the DB already has are skipped (the reference's rerun semantics)
-        // and the firing stays O(batch) end to end
-        JdbcSink.upsertJdbc(
+        JdbcSink.initSchema(url, f.mirrorDdl)
+        // replace ONLY this firing's dates in the DB with the freshly
+        // merged sink's rows for them (a partition-pruned read), so the
+        // firing stays O(batch) end to end
+        JdbcSink.replaceDates(
           spark.read.parquet(s"$sinkRoot/${f.name}")
-            .filter(col("date").isin(touched: _*))
             .select(f.schema.fieldNames.map(col).toSeq: _*),
-          url, f.jdbcTable, f.keys)
+          url, f.jdbcTable, touched)
       }
     }
   }

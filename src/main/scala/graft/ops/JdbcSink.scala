@@ -2,8 +2,11 @@ package graft.ops
 
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** JDBC sink surface (SURVEY.md §2.1 S4) — the reference's ONLY sink is a
   * batched Postgres insert with conflict-skip
@@ -11,7 +14,7 @@ import org.apache.spark.sql.types._
   * /root/reference/src/main/kotlin/covid19/nytimes/processor/
   * NytimesBatchProcessorApplication.kt:90-96, SQL at :138-141,175-178).
   *
-  * Two Spark-first mappings, both exercised against embedded Derby
+  * Two paths, both exercised against embedded Derby
   * (`/opt/spark/jars/derby-*.jar` — in-process, offline-testable):
   *
   *  1. [[writeJdbc]] — the declarative path: `df.write.jdbc` with
@@ -21,117 +24,72 @@ import org.apache.spark.sql.types._
   *     Append-only: no conflict handling, for first loads and
   *     insert-only tables.
   *
-  *  2. [[upsertJdbc]] — the reference's actual semantics: idempotent
-  *     keyed insert-if-absent. Spark's JDBC writer has no upsert mode, so
-  *     this is the documented `foreachPartition` escape hatch: each
-  *     partition binds one prepared `INSERT … SELECT … WHERE NOT EXISTS`
-  *     (ANSI; works on Derby, Postgres, anything) and executes it in
-  *     JDBC batches inside a transaction.
-  *
-  * Scale: both paths ship N executor-side connections (one per
-  * partition) writing concurrently — the DB, not Spark, is the
-  * bottleneck; `repartition(k)` the frame first to match the DB's
-  * connection budget. Nothing collects to the driver.
-  *
-  * Concurrency note for upsert: `NOT EXISTS` sees committed rows, so
-  * re-runs and cross-run overlaps dedup exactly like ON CONFLICT DO
-  * NOTHING. Within ONE run, callers must dedup keys first
-  * ([[Ingest.dedupKeepFirst]]) — after that each key lives in exactly one
-  * task, so concurrent partitions never race on a key (the same contract
-  * the reference meets by deduping per chunk, .kt:133-141).
+  *  2. [[replaceDates]] — the mirror of a date-partitioned sink: one
+  *     driver-side transaction deletes the touched dates and inserts the
+  *     sink's rows for them. This gives the reference's ON CONFLICT DO
+  *     NOTHING result because the sink merge
+  *     ([[Ingest.appendIdempotent]]) has already let stored rows win: the
+  *     sink's slice is exactly what DO NOTHING would leave in the table, so
+  *     replacing the mirror's slice with it needs no key match, no per-row
+  *     existence probe and no per-type SQL mapping. One connection means no
+  *     cross-task lock race; plain ANSI statements work on Derby and
+  *     Postgres alike.
   */
 object JdbcSink {
 
+  /** Rows per JDBC batch: the reference's chunk(1000), .kt:88. */
+  val ChunkRows = 1000
+
   /** S4 declarative path: Spark's batched JDBC writer. `batchSize` maps
-    * to the driver-level `addBatch`/`executeBatch` chunking (the
-    * reference's chunk(1000)); `numPartitions` caps concurrent
-    * connections. Creates the table (from the frame's schema via the
-    * JDBC dialect) if absent; appends otherwise. */
+    * to the driver-level `addBatch`/`executeBatch` chunking. Creates the
+    * table (from the frame's schema via the JDBC dialect) if absent;
+    * appends otherwise. */
   def writeJdbc(df: DataFrame, url: String, table: String,
-                batchSize: Int = 1000,
-                numPartitions: Option[Int] = None): Unit = {
-    val base = numPartitions.map(df.coalesce).getOrElse(df)
-    base.write.mode("append")
+                batchSize: Int = ChunkRows): Unit =
+    df.write.mode("append")
       .option("batchsize", batchSize.toString)
       .jdbc(url, table, new java.util.Properties)
-  }
 
-  /** Spark type → java.sql.Types for null binding ([[upsertJdbc]]). */
-  private def sqlType(dt: DataType): Int = dt match {
-    case StringType    => java.sql.Types.VARCHAR
-    case IntegerType   => java.sql.Types.INTEGER
-    case LongType      => java.sql.Types.BIGINT
-    case DoubleType    => java.sql.Types.DOUBLE
-    case FloatType     => java.sql.Types.FLOAT
-    case DateType      => java.sql.Types.DATE
-    case TimestampType => java.sql.Types.TIMESTAMP
-    case BooleanType   => java.sql.Types.BOOLEAN
-    case _: DecimalType => java.sql.Types.DECIMAL
-    case other => sys.error(s"upsertJdbc: unsupported column type $other")
-  }
-
-  /** Spark type → ANSI type name, for CASTing the VALUES parameters
-    * (Derby — like DB2 — rejects untyped `?` columns in a table
-    * constructor: every placeholder needs a declared type). */
-  private def ansiType(dt: DataType): String = dt match {
-    case StringType    => "VARCHAR(4000)"
-    case IntegerType   => "INTEGER"
-    case LongType      => "BIGINT"
-    case DoubleType    => "DOUBLE"
-    case FloatType     => "FLOAT"
-    case DateType      => "DATE"
-    case TimestampType => "TIMESTAMP"
-    case BooleanType   => "BOOLEAN"
-    case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-    case other => sys.error(s"upsertJdbc: unsupported column type $other")
-  }
-
-  /** A5+S4: idempotent keyed insert — `INSERT … ON CONFLICT DO NOTHING`
-    * re-expressed as ANSI `INSERT … SELECT … FROM (VALUES …) WHERE NOT
-    * EXISTS`, batched per partition. Null-safe key match (a NULL fips
-    * matches a NULL fips — the collision the reference engineered with
-    * its `-1` sentinel, .kt:133,171, without corrupting the value).
-    * Re-running the same frame is a no-op; existing rows always win. */
-  def upsertJdbc(df: DataFrame, url: String, table: String,
-                 keys: Seq[String], batchSize: Int = 1000): Unit = {
-    val schema = df.schema
-    val cols = schema.fieldNames.toSeq
-    require(keys.forall(cols.contains), s"keys $keys must be in $cols")
-    val colList = cols.mkString(", ")
-    val placeholders = schema.fields
-      .map(f => s"CAST(? AS ${ansiType(f.dataType)})").mkString(", ")
-    val keyMatch = keys.map(k =>
-      s"(t.$k = s.$k OR (t.$k IS NULL AND s.$k IS NULL))").mkString(" AND ")
-    val sql =
-      s"""INSERT INTO $table ($colList)
-         |SELECT $colList FROM (VALUES ($placeholders)) AS s($colList)
-         |WHERE NOT EXISTS (SELECT 1 FROM $table t WHERE $keyMatch)""".stripMargin
-    val types = schema.fields.map(f => sqlType(f.dataType))
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          val stmt = conn.prepareStatement(sql)
-          try {
-            var pending = 0
-            rows.foreach { r =>
-              var i = 0
-              while (i < types.length) {
-                if (r.isNullAt(i)) stmt.setNull(i + 1, types(i))
-                else stmt.setObject(i + 1, r.get(i))
-                i += 1
-              }
-              stmt.addBatch()
-              pending += 1
-              if (pending >= batchSize) { stmt.executeBatch(); pending = 0 }
+  /** A5+S4: make `table`'s rows for `dates` equal `df`'s rows for them, in
+    * one transaction: a batch of `DELETE … WHERE date = ?`, then plain
+    * batched INSERTs of the slice, streamed to the driver with
+    * `toLocalIterator` (one partition in memory at a time). Any failure
+    * rolls the whole replace back, so a date is never left half-mirrored.
+    * NULLs (e.g. a blank fips) bind with the column type the database
+    * reports for the insert's parameter. The cost is O(rows of the touched
+    * dates) given an index on `date`. */
+  def replaceDates(df: DataFrame, url: String, table: String,
+                   dates: Seq[Any]): Unit = {
+    val cols = df.columns
+    val insert = s"INSERT INTO $table (${cols.mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
+    Using.resource(DriverManager.getConnection(url)) { conn =>
+      conn.setAutoCommit(false)
+      try {
+        Using.resource(conn.prepareStatement(s"DELETE FROM $table WHERE date = ?")) { del =>
+          dates.foreach { d => del.setObject(1, d); del.addBatch() }
+          del.executeBatch()
+        }
+        Using.resource(conn.prepareStatement(insert)) { ins =>
+          val meta = ins.getParameterMetaData
+          val types = cols.indices.map(i => meta.getParameterType(i + 1)).toArray
+          var pending = 0
+          df.filter(col("date").isin(dates: _*)).toLocalIterator().asScala.foreach { r =>
+            var i = 0
+            while (i < types.length) {
+              if (r.isNullAt(i)) ins.setNull(i + 1, types(i))
+              else ins.setObject(i + 1, r.get(i))
+              i += 1
             }
-            if (pending > 0) stmt.executeBatch()
-            conn.commit()
-          } catch {
-            case e: Throwable => conn.rollback(); throw e
-          } finally stmt.close()
-        } finally conn.close()
+            ins.addBatch()
+            pending += 1
+            if (pending == ChunkRows) { ins.executeBatch(); pending = 0 }
+          }
+          if (pending > 0) ins.executeBatch()
+        }
+        conn.commit()
+      } catch {
+        case e: Throwable => conn.rollback(); throw e
       }
     }
   }

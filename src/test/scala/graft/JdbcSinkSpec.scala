@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import ops.{Ingest, JdbcSink}
 
 /** S4 JDBC sink round trip against embedded Derby (in-process, offline):
-  * CSV → dedup → JDBC upsert → read-back must equal the parquet path, and
-  * re-running the upsert must be a no-op (ON CONFLICT DO NOTHING parity —
-  * the reference's every-15-minutes rerun semantics).
+  * CSV → dedup → JDBC date replace → read-back must equal the parquet
+  * path, re-running the replace must leave identical contents, dates
+  * outside the touched set must not change, and a failed replace must
+  * throw and roll back its deletes.
   */
 class JdbcSinkSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -23,13 +24,14 @@ class JdbcSinkSpec extends AnyFunSuite {
   private val url = s"jdbc:derby:$dbDir;create=true"
 
   // the reference's states DDL (schema.sql:1-8) minus the Postgres-isms
-  private val statesDdl =
-    """CREATE TABLE states (
-      |  date DATE NOT NULL,
-      |  state VARCHAR(100) NOT NULL,
-      |  fips INTEGER,
-      |  cases BIGINT,
-      |  deaths BIGINT)""".stripMargin
+  private def statesDdl(table: String) = Seq(
+    s"""CREATE TABLE $table (
+       |  date DATE NOT NULL,
+       |  state VARCHAR(100) NOT NULL,
+       |  fips INTEGER,
+       |  cases BIGINT,
+       |  deaths BIGINT)""".stripMargin,
+    s"CREATE INDEX ${table}_date ON $table (date)")
 
   private def fixtureCsv(): String = {
     val dir = Files.createTempDirectory("graft-jdbc-src")
@@ -46,13 +48,32 @@ class JdbcSinkSpec extends AnyFunSuite {
     Ingest.dedupKeepFirst(Ingest.readStates(spark, src), Ingest.statesKey,
       Seq(col("cases").asc, col("deaths").asc))
 
-  test("CSV → dedup → JDBC upsert → read-back equals the parquet path; rerun is a no-op") {
-    val src = fixtureCsv()
-    JdbcSink.initSchema(url, Seq(statesDdl))
-    val cleaned = dedupedStates(src)
+  private def day(d: String) = java.sql.Date.valueOf(d)
 
-    JdbcSink.upsertJdbc(cleaned, url, "states", Ingest.statesKey)
-    val viaJdbc = spark.read.jdbc(url, "states", new java.util.Properties)
+  private def statesFrame(rows: (String, String, Option[Int], Long, Long)*) = {
+    import spark.implicits._
+    rows.toDF("date", "state", "fips", "cases", "deaths")
+      .select(col("date").cast("date"), col("state"), col("fips"),
+        col("cases"), col("deaths"))
+  }
+
+  private def canon(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("date").cast("string"), col("state"), col("fips"),
+      col("cases"), col("deaths"))
+      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
+  private def table(name: String) =
+    spark.read.jdbc(url, name, new java.util.Properties)
+
+  test("CSV → dedup → JDBC replace → read-back equals the parquet path; rerun is no-op") {
+    val src = fixtureCsv()
+    JdbcSink.initSchema(url, statesDdl("states"))
+    JdbcSink.initSchema(url, statesDdl("states")) // idempotent, index too
+    val cleaned = dedupedStates(src)
+    val touched = Seq(day("2020-03-15"), day("2020-03-16"))
+
+    JdbcSink.replaceDates(cleaned, url, "states", touched)
+    val viaJdbc = table("states")
 
     // parquet path over the same source
     val sink = Files.createTempDirectory("graft-jdbc-pq").resolve("states")
@@ -60,33 +81,51 @@ class JdbcSinkSpec extends AnyFunSuite {
       Seq(col("cases").asc, col("deaths").asc), sink.toString)
     val viaParquet = spark.read.parquet(sink.toString)
 
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("date").cast("string"), col("state"), col("fips"),
-        col("cases"), col("deaths"))
-        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    assert(canon(viaJdbc) == canon(viaParquet))
-    assert(viaJdbc.count() == 3) // 4 rows - 1 in-feed key dup
+    val first = canon(viaJdbc)
+    assert(first == canon(viaParquet))
+    assert(first.size == 3) // 4 rows - 1 in-feed key dup
+    // the blank-fips row round-trips as NULL, not a sentinel
+    assert(viaJdbc.filter(col("state") === "Guam" && col("fips").isNull)
+      .count() == 1)
 
-    // rerun: every key already present (incl. the NULL-fips row — the
-    // null-safe match must treat NULL = NULL) → zero new rows
-    JdbcSink.upsertJdbc(cleaned, url, "states", Ingest.statesKey)
-    assert(spark.read.jdbc(url, "states", new java.util.Properties)
-      .count() == 3)
+    // rerun: identical contents, no duplicates
+    JdbcSink.replaceDates(cleaned, url, "states", touched)
+    assert(canon(table("states")) == first)
 
-    // incremental batch: one conflicting key (existing row wins — the
-    // stored cases=904 survives), one new key
-    import spark.implicits._
-    val batch2 = Seq(
+    // replace 03-16 and 03-17 only: the frame's 03-15 row is outside the
+    // touched set and must not reach the table, and 03-15 stays as it was
+    JdbcSink.replaceDates(statesFrame(
       ("2020-03-15", "Washington", Some(53), 777L, 7L),
-      ("2020-03-17", "Washington", Some(53), 1100L, 55L))
-      .toDF("date", "state", "fips", "cases", "deaths")
-      .select(col("date").cast("date"), col("state"), col("fips"),
-        col("cases"), col("deaths"))
-    JdbcSink.upsertJdbc(batch2, url, "states", Ingest.statesKey)
-    val after = spark.read.jdbc(url, "states", new java.util.Properties)
-    assert(after.count() == 4)
-    assert(after.filter(col("cases") === 904).count() == 1)
-    assert(after.filter(col("cases") === 777).count() == 0)
+      ("2020-03-16", "Washington", Some(53), 1001L, 53L),
+      ("2020-03-17", "Washington", Some(53), 1100L, 55L)),
+      url, "states", Seq(day("2020-03-16"), day("2020-03-17")))
+    val after = canon(table("states"))
+    assert(after.filter(_.head == "2020-03-15") ==
+      first.filter(_.head == "2020-03-15"))
+    assert(after.filterNot(_.head == "2020-03-15") == Seq(
+      Seq("2020-03-16", "Washington", 53, 1001L, 53L),
+      Seq("2020-03-17", "Washington", 53, 1100L, 55L)))
+  }
+
+  test("a replace that fails part-way throws and leaves the touched dates as they were") {
+    JdbcSink.initSchema(url, statesDdl("states_rollback"))
+    val touched = Seq(day("2020-03-15"), day("2020-03-16"))
+    JdbcSink.replaceDates(dedupedStates(fixtureCsv()), url, "states_rollback",
+      touched)
+    val before = canon(table("states_rollback"))
+    assert(before.size == 3)
+
+    // more than one JDBC batch of good rows, then a state name too long
+    // for VARCHAR(100): the first batch has executed when the insert fails
+    val good = statesFrame((1 to JdbcSink.ChunkRows + 500)
+      .map(i => ("2020-03-15", s"S$i", Option(i), i.toLong, 0L)): _*)
+    val bad = statesFrame(("2020-03-16", "x" * 200, Some(1), 1L, 1L))
+    val slice = good.coalesce(1).union(bad.coalesce(1))
+    intercept[java.sql.SQLException] {
+      JdbcSink.replaceDates(slice, url, "states_rollback", touched)
+    }
+    // the DELETEs and the executed batch were rolled back
+    assert(canon(table("states_rollback")) == before)
   }
 
   test("writeJdbc appends via Spark's batched writer and creates the table") {

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** O1 end-to-end artifact: one NytJob.runOnce call reproduces the
@@ -72,5 +73,68 @@ class NytJobSpec extends AnyFunSuite {
     assert(spark.read.parquet(sink.resolve("states").toString).count() == 2)
     assert(spark.read.jdbc(url, "states", new java.util.Properties)
       .count() == 2)
+  }
+
+  /** Per date: rows, sum of cases, sum of deaths, NULL-fips rows. */
+  private def perDate(df: DataFrame): Map[String, Seq[Long]] =
+    df.groupBy(col("date").cast("string"))
+      .agg(count(lit(1)), sum("cases"), sum("deaths"),
+        sum(when(col("fips").isNull, 1).otherwise(0)))
+      .collect().map(r => r.getString(0) -> (1 to 4).map(r.getLong)).toMap
+
+  test("a revision of already-mirrored dates goes through the mirror; mirror = sink per date") {
+    val root = Files.createTempDirectory("graft-nyt-rev")
+    val src = root.resolve("src"); val sink = root.resolve("sink")
+    val ckpt = root.resolve("ckpt")
+    val url = s"jdbc:derby:${root.resolve("db")};create=true"
+    val days = Seq("2020-03-10", "2020-03-11", "2020-03-12", "2020-03-13")
+    // 20 counties plus a blank-fips "Unknown"; 6 states plus blank-fips Guam
+    val counties = (1 to 20).map(i => s"C$i,Washington,${53000 + i}") :+
+      "Unknown,Washington,"
+    val states = (1 to 6).map(i => s"S$i,$i") :+ "Guam,"
+    val late = 5 // the last 5 of each feed miss the first three days
+    def drop(feed: String, name: String, geos: Seq[String], header: String,
+             revision: Boolean): Unit = {
+      val lines = for {
+        (d, di) <- days.zipWithIndex
+        if !revision || di < 3
+        (g, gi) <- geos.zipWithIndex
+        if revision || di == 3 || gi < geos.size - late
+      } yield {
+        val cases = 100L * (gi + 1) + di + (if (revision) 5000 else 0)
+        s"$d,$g,$cases,${cases / 10}"
+      }
+      Files.createDirectories(src.resolve(feed))
+      Files.writeString(src.resolve(feed).resolve(name),
+        (header +: lines).mkString("\n") + "\n")
+    }
+    def fire(): Unit = NytJob.runOnce(spark, src.toString, sink.toString,
+      ckpt.toString, Some(url))
+    def mirror(t: String) = spark.read.jdbc(url, t, new java.util.Properties)
+
+    drop("counties", "c1.csv", counties, "date,county,state,fips,cases,deaths", false)
+    drop("states", "s1.csv", states, "date,state,fips,cases,deaths", false)
+    fire()
+    assert(mirror("counties").count() == 3 * (21 - late) + 21)
+
+    // the revision restates every row of the first three (mirrored) days:
+    // stored rows must win, the late reporters are inserted
+    drop("counties", "c2.csv", counties, "date,county,state,fips,cases,deaths", true)
+    drop("states", "s2.csv", states, "date,state,fips,cases,deaths", true)
+    fire()
+
+    for ((feed, geos) <- Seq("counties" -> counties, "states" -> states)) {
+      val sunk = spark.read.parquet(sink.resolve(feed).toString)
+      val bySink = perDate(sunk)
+      assert(bySink.keySet == days.toSet)
+      assert(bySink.values.forall(_.head == geos.size), s"$feed: $bySink")
+      assert(perDate(mirror(feed)) == bySink, feed)
+      // stored rows won: only the late rows carry revision values, and the
+      // blank-fips late row arrived as NULL
+      for (t <- Seq(sunk, mirror(feed))) {
+        assert(t.filter(col("cases") >= 5000).count() == 3 * late, feed)
+        assert(t.filter(col("fips").isNull).count() == days.size, feed)
+      }
+    }
   }
 }
