@@ -1,11 +1,13 @@
 #!/usr/bin/env bash
 # Run a graft main directly on the compiled classes — no sbt, no project
-# lock, so long drives (Verify replays, StressGen, Bench) can run in the
+# lock, so long drives (Verify replays, StressGen) can run in the
 # background while sbt compiles/tests in the foreground. Compile first
 # (`sbt compile`); this script does NOT rebuild.
 #
 # Usage: run_main.sh <graft.MainClass> [args...]
 #   env: JVM_MEM (default 32g), JVM_OPTS (extra flags)
+# Session settings are Spark properties passed as -D flags (graft.Session),
+# e.g. JVM_OPTS="-Dspark.master=local[8] -Dspark.graft.scan.spreadRowFloor=1"
 set -euo pipefail
 MAIN="$1"; shift
 exec java -Xmx"${JVM_MEM:-32g}" ${JVM_OPTS:-} \

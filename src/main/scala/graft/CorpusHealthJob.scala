@@ -158,16 +158,8 @@ object CorpusHealthJob {
       |       CorpusHealthJob alerts <reportRoot>""".stripMargin
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-corpus-health-job")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-health-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-corpus-health-job", "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-health-wh").toString)
     args.toList match {
       case "record" :: sfDir :: root :: runId :: Nil =>
         val n = record(spark, sfDir, root, runId.toLong)

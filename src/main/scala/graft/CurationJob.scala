@@ -120,15 +120,7 @@ object CurationJob {
   def main(args: Array[String]): Unit = {
     require(args.length == 3,
       "usage: CurationJob <inDir> <shardRoot> <stateRoot>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-curation-job")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-curation-job")
     val n = runOnce(spark, args(0), args(1), args(2))
     println(s"[curation-job] shipped $n docs")
     spark.stop()

@@ -124,14 +124,7 @@ object LayoutJob {
 
   def main(args: Array[String]): Unit = {
     val cmd = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-layout-job")
     cmd match {
       case "land" =>
         land(spark, args(1), args(2))

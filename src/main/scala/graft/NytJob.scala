@@ -95,12 +95,7 @@ object NytJob {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: NytJob <srcRoot> <sinkRoot> <checkpointRoot> [jdbcUrl]")
-    val spark = SparkSession.builder()
-      .appName("nyt-batch-job")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .getOrCreate()
+    val spark = Session("nyt-batch-job")
     try runOnce(spark, args(0), args(1), args(2), args.lift(3))
     finally spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization tooling: dump `.explain("formatted")` for named registry
   * queries to files, so plan-shape claims in OPTIMIZATION_rN.md are
@@ -14,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * plan time, filter pushed) are exact; runtime partition counts are not.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  * Env: SPARK_GRAFT_CPUS (master local[N], same contract as Bench).
+  * Settings: Spark properties, as for every main ([[Session]]).
   * Exits non-zero when any selected query fails to plan.
   */
 object PlanDump {
@@ -22,21 +21,9 @@ object PlanDump {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the Bench session so dumped plans are the timed plans
-      .config("spark.graft.scan.autoParallelize",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_SPREAD", "true"))
-      // gate-time spread-floor override (SPARK_GRAFT_SPREAD_FLOOR=1
-      // spreads documents/embeddings at sf0.01 too - equivalence gate)
-      .config("spark.graft.scan.spreadRowFloor",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD_FLOOR", "512"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // match the Verify session so dumped plans are the gated plans
+    val spark = Session("graft-plan-dump",
+      "spark.graft.scan.autoParallelize" -> "true")
     ops.StageCache.clearAll()
     new java.io.File(outDir).mkdirs()
     var nFailed = 0

@@ -329,15 +329,7 @@ object RagIndexJob {
       |       RagIndexJob <sfDir> <indexRoot>          (legacy = build)""".stripMargin
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-rag-index-job")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-rag-index-job")
     args.toList match {
       case "build" :: sfDir :: root :: Nil =>
         val (n, u, p) = build(spark, sfDir, root)

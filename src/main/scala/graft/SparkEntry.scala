@@ -29,7 +29,7 @@ object SparkEntry {
     * frame (q283), and the daily order series (q285). The returned
     * DataFrame is lazy, so the
     * function cannot unpersist after the caller's action; run
-    * `spark.catalog.clearCache()` between queries (Verify and Bench do)
+    * `spark.catalog.clearCache()` between queries (Verify and the benchmark do)
     * or the cached blocks outlive the query. Every pinned frame is
     * BOUNDED (domain-/calendar-/eval-sized) except the documented
     * self-join feature tables. */

@@ -97,14 +97,7 @@ object StressGen {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/sf1ish")
     val replicas = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-stress-gen")
     val counts = generate(spark, srcDir, outDir, replicas)
     counts.toSeq.sortBy(_._1).foreach { case (n, c) =>
       println(f"[stressgen] $n%-12s $c%,12d rows")

@@ -190,14 +190,7 @@ object SynthEventsJob {
 
   def main(args: Array[String]): Unit = {
     val cmd = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-synth-events-job")
     cmd match {
       case "model"    => model(spark, args(1), args(2))
       case "generate" => generate(spark, args(1), args(2), args(3).toLong,

@@ -42,7 +42,7 @@ object Tables {
     * its untouched scan-local plan, because there a blanket repartition
     * would shuffle the whole corpus for nothing (guide §8's anti-pattern).
     * Opt-in via spark.graft.scan.autoParallelize: set by the
-    * driver-contract mains (Verify, Bench, PlanDump), off for library
+    * registry-sweep mains (Verify, PlanDump), off for library
     * embedders and the plan-shape suite, which asserts on the scan-local
     * shapes that hold at scale. */
   // below: dimension-table-sized. Conf-overridable (see maybeSpread) so a
@@ -70,9 +70,9 @@ object Tables {
   private val SpreadTablesDefault = "documents,embeddings,lineitem,orders"
   private def maybeSpread(s: SparkSession, df: DataFrame,
                           path: String, name: String): DataFrame = {
-    // lenient parse (ADVICE r13): the driver mains pass
-    // SPARK_GRAFT_SCAN_SPREAD through verbatim, so "0"/"off"/"no" must
-    // read as disabled, not throw IllegalArgumentException at query time
+    // lenient parse (ADVICE r13): the value is any user-given Spark
+    // property, so "0"/"off"/"no" must read as disabled, not throw
+    // IllegalArgumentException at query time
     if (!s.conf.getOption("spark.graft.scan.autoParallelize")
       .exists(_.equalsIgnoreCase("true"))) return df
     val allow = s.conf.getOption("spark.graft.scan.spreadTables")

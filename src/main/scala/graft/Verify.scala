@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -52,23 +52,11 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local dev loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // layout-adaptive scan-parallelism floor (Tables.maybeSpread): set
-      // in BOTH driver-contract mains so the correctness gate runs the
-      // exact plans the bench times
-      .config("spark.graft.scan.autoParallelize",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_SPREAD", "true"))
-      // gate-time spread-floor override (SPARK_GRAFT_SPREAD_FLOOR=1
-      // spreads documents/embeddings at sf0.01 too - equivalence gate)
-      .config("spark.graft.scan.spreadRowFloor",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD_FLOOR", "512"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // layout-adaptive scan-parallelism floor (Tables.maybeSpread);
+    // -Dspark.graft.scan.spreadRowFloor=1 spreads documents/embeddings at
+    // sf0.01 too (equivalence gate)
+    val spark = Session("graft-verify",
+      "spark.graft.scan.autoParallelize" -> "true")
     // start from a clean stage registry — pinned stages from any prior
     // session state must never leak into a correctness run (the cache is
     // also mtime-keyed, so this is belt-and-braces)

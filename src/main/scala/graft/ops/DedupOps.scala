@@ -1986,7 +1986,7 @@ $sqlJac,
     * `persist()` their feature table so
     * the self-join's branches share one computation — a lazily returned
     * DataFrame cannot unpersist behind its own action, so the CACHE
-    * LIFETIME IS THE CALLER'S. The driver harness (Verify/Bench/specs)
+    * LIFETIME IS THE CALLER'S. Every harness (Verify, benchmark, specs)
     * runs `spark.catalog.clearCache()` between queries; any other caller
     * must do the same or accept the cached blocks until session end. */
   // ---- q230: dedup quality uplift --------------------------------------

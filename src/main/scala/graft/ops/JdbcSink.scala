@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, SQLException}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -94,11 +94,16 @@ object JdbcSink {
     }
   }
 
+  /** The SQLStates of "table or index already exists": Derby's X0Y32 /
+    * X0Y68 and Postgres's 42P07. */
+  private[graft] def alreadyExists(e: SQLException): Boolean =
+    Set("X0Y32", "X0Y68", "42P07")(e.getSQLState)
+
   /** S6 DDL surface: run schema-init statements (the reference's
     * `schema.sql` analog) over a plain JDBC connection. Statements that
-    * fail because the object already exists are swallowed (Derby
-    * SQLState X0Y32 / X0Y68), so init is idempotent like
-    * `CREATE TABLE IF NOT EXISTS`. */
+    * fail because the object already exists are swallowed
+    * ([[alreadyExists]]), so init is idempotent like
+    * `CREATE TABLE IF NOT EXISTS`; any other failure is rethrown. */
   def initSchema(url: String, statements: Seq[String]): Unit = {
     val conn: Connection = DriverManager.getConnection(url)
     try {
@@ -106,8 +111,7 @@ object JdbcSink {
       try statements.foreach { ddl =>
         try st.executeUpdate(ddl)
         catch {
-          case e: java.sql.SQLException
-            if e.getSQLState == "X0Y32" || e.getSQLState == "X0Y68" => ()
+          case e: SQLException if alreadyExists(e) => ()
         }
       } finally st.close()
     } finally conn.close()

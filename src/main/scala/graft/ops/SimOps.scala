@@ -1265,7 +1265,7 @@ object SimOps {
     // All five evalMethod legs join against the same ground truth; the
     // persist makes the exact O(n·|Q|) corpus scan run ONCE for the whole
     // union instead of once per leg (the frame itself is |Q|·3 rows).
-    // Caller contract: Verify/Bench clearCache between queries.
+    // Caller contract: Verify/benchmark clearCache between queries.
     val gt = c.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cosine",
@@ -1683,7 +1683,7 @@ object SimOps {
   /** Shared node/edge derivation for q130 (graph dump) and q132 (rank
     * propagation): (nodes = every vec_id, edges = cell-bounded top-K).
     * The cell assignment is persisted; both consumers run inside one
-    * Verify/Bench query slot each, and the session cache is cleared
+    * Verify/benchmark query slot each, and the session cache is cleared
     * between slots (SparkEntry caller contract). */
   /** The raw edge derivation: (persisted cell-assignment base, un-pinned
     * edge plan). The base is persisted so the cell self-join's two

@@ -104,27 +104,6 @@ object StageCache {
       _ => new Holder(() => compute)).force
   }
 
-  /** Drop ONE pinned stage for a dataset (any version) — the bench
-    * re-derivation hook: stage units are timed min-of-N like queries,
-    * which needs the pin evicted between iterations while sibling
-    * stages (a stage's own upstream pins) stay live. */
-  def clear(d: String, stage: String): Boolean = {
-    var evicted = false
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.d == d && e.getKey.stage == stage) {
-        e.getValue.peek.foreach { df =>
-          try df.unpersist(blocking = false)
-          catch { case _: Exception => () }
-        }
-        it.remove()
-        evicted = true
-      }
-    }
-    evicted
-  }
-
   /** Drop every pinned stage (tests / sessions that mutate the
     * underlying tables between runs). */
   def clearAll(): Unit = {

@@ -370,7 +370,7 @@ object TextOps {
       // vocab derivation + the final posexplode join both read enc, and
       // its 12-step regexp fold over the distinct-word table is the
       // expensive part — persist the vocab-sized frame so the fold runs
-      // once (caller contract: Verify/Bench clearCache)
+      // once (caller contract: Verify/benchmark clearCache)
       .persist()
     val vocab = enc.select(explode(col("syms")).as("sym")).distinct()
       .withColumn("token_id",
@@ -549,7 +549,7 @@ object TextOps {
     // tf (query terms only — tiny) feeds dfN + scored; dl (per-doc
     // lengths) feeds stats + scored: persist both compact frames so the
     // corpus tokenizes twice (tf pass + dl pass) instead of four times
-    // (caller contract: Verify/Bench clearCache). The exploded token
+    // (caller contract: Verify/benchmark clearCache). The exploded token
     // stream itself stays unpersisted — corpus-sized strings, the q129
     // cache-serialization anti-case.
     val tf = tok.groupBy(col("doc_id"), col("token"))

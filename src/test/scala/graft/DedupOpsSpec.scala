@@ -47,32 +47,6 @@ class DedupOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("StageCache.clear evicts exactly the named stage and reports it") {
-    import ops.StageCache
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sc-clear-")
-      .toFile
-    try {
-      var a = 0; var b = 0
-      def stageA() = StageCache.getOrCompute(spark, dir.getPath, "a") {
-        a += 1; Seq(a).toDF("v").localCheckpoint(true) }
-      def stageB() = StageCache.getOrCompute(spark, dir.getPath, "b") {
-        b += 1; Seq(b).toDF("v").localCheckpoint(true) }
-      stageA(); stageB()
-      // clearing a evicts ONLY a (the bench re-derivation contract:
-      // sibling pins — a stage's upstream stages — must stay live)
-      assert(StageCache.clear(dir.getPath, "a"))
-      stageA(); stageB()
-      assert(a == 2 && b == 1)
-      // clearing an unknown stage reports false (Bench fails loudly on
-      // unit/key drift instead of timing a cache hit)
-      assert(!StageCache.clear(dir.getPath, "nope"))
-      assert(!StageCache.clear("/no/such/dataset", "a"))
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete(): Unit
-    }
-  }
-
   test("StageCache: a stage builder may depend on another stage (no recursive-update)") {
     import ops.StageCache
     import spark.implicits._

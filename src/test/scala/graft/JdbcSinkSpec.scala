@@ -128,6 +128,20 @@ class JdbcSinkSpec extends AnyFunSuite {
     assert(canon(table("states_rollback")) == before)
   }
 
+  test("initSchema swallows only already-exists states: Postgres 42P07 counts, others rethrow") {
+    // NytJob re-runs the mirror DDL every data firing, so Postgres's
+    // "duplicate table" (42P07, also raised for an existing index) must
+    // count as "exists" like Derby's X0Y32 / X0Y68
+    def failure(state: String) = new java.sql.SQLException("ddl failed", state)
+    Seq("X0Y32", "X0Y68", "42P07").foreach(s =>
+      assert(JdbcSink.alreadyExists(failure(s)), s))
+    assert(!JdbcSink.alreadyExists(failure("42000")))
+    // any other failure (here Derby's syntax error 42X01) is rethrown
+    val e = intercept[java.sql.SQLException](
+      JdbcSink.initSchema(url, Seq("CREATE TABLE")))
+    assert(!JdbcSink.alreadyExists(e), e.getSQLState)
+  }
+
   test("writeJdbc appends via Spark's batched writer and creates the table") {
     val src = fixtureCsv()
     val cleaned = dedupedStates(src)
