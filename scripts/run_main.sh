@@ -5,12 +5,17 @@
 # (`sbt compile`); this script does NOT rebuild.
 #
 # Usage: run_main.sh <graft.MainClass> [args...]
-#   env: JVM_MEM (default 32g), JVM_OPTS (extra flags)
+#   env: JVM_MEM (default half the machine's memory, clamped to 2g-8g),
+#        JVM_OPTS (extra flags)
+# The classes are the ones compiled in this script's own checkout.
 # Session settings are Spark properties passed as -D flags (graft.Session),
 # e.g. JVM_OPTS="-Dspark.master=local[8] -Dspark.graft.scan.spreadRowFloor=1"
 set -euo pipefail
 MAIN="$1"; shift
-exec java -Xmx"${JVM_MEM:-32g}" ${JVM_OPTS:-} \
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+MEM="${JVM_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+exec java -Xmx"$MEM" ${JVM_OPTS:-} \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
@@ -26,5 +31,5 @@ exec java -Xmx"${JVM_MEM:-32g}" ${JVM_OPTS:-} \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dderby.system.home=/tmp/derby \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

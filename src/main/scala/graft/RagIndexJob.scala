@@ -1,9 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import ops.{CurationOps, PartitionSwap, SimOps}
 
@@ -30,12 +35,12 @@ import ops.{CurationOps, PartitionSwap, SimOps}
   *      projection the ANN operators use ([[SimOps.planesFor]] /
   *      `bucketExpr`), so bucket balance carries over;
   *   5. one index artifact — `index.parquet` (md5, ids, text, vector,
-  *      bucket) range-partitioned and sorted by bucket, so a serve-time
-  *      `bucket = q` filter prunes files and row groups by parquet
-  *      min/max stats instead of scanning the index. At cluster scale
-  *      this layout is `bucketBy` into the catalog; a 1-row
-  *      `manifest.parquet` pins the plane count so neither lookups nor
-  *      updates re-derive corpus statistics.
+  *      bucket) range-partitioned and sorted by bucket, so a `bucket = q`
+  *      filter prunes files and row groups by parquet min/max stats
+  *      instead of scanning the index. At cluster scale this layout is
+  *      `bucketBy` into the catalog; a 1-row `manifest.parquet` pins the
+  *      plane count so neither lookups nor updates re-derive corpus
+  *      statistics.
   *
   * Incremental ingest ([[update]]): chunk the new batch, canonicalize
   * within it, LEFT-ANTI probe the index's md5 ledger, and append only
@@ -58,11 +63,19 @@ import ops.{CurationOps, PartitionSwap, SimOps}
   * wrapper: retune if drifted (a retune also restores the layout),
   * else compact if fragmented, else no-op.
   *
-  * Serve path ([[lookup]]): embed the query with the same stub, bucket
-  * it with the same planes, read ONLY the matching index slice, exact
-  * integer-dot cosine re-rank, top-k with the chunk text. O(bucket)
-  * work per query — the build-once / serve-many contract the pinned ANN
-  * stages model inside the bench, here as durable on-disk artifacts.
+  * Serve path ([[lookup]]): a lookup serves from an in-memory snapshot of
+  * the index version it finds live — the manifest's plane weights and
+  * each bucket's chunks, read once per version. A version is named by
+  * the listing of the live `index.parquet` (file names, lengths and
+  * mtimes); every publish writes part files under new names, so a lookup
+  * lists that dir once and, while the listing is unchanged, runs no
+  * Spark job at all. The query is embedded with the same stub, bucketed
+  * with [[SimOps.bucketOf]] (the in-process twin of `bucketExpr`), and
+  * its bucket's candidates are re-ranked by exact integer-dot cosine;
+  * the top k come back with their chunk text as a local `DataFrame`.
+  * O(bucket) work per query. Readers never repair the root: while the
+  * live dir is missing (a swap between its renames, or a crash there)
+  * the loaded version keeps serving, and only writers recover.
   *
   * Determinism: every stage is a pure function of the corpus bytes, so
   * a rebuild rewrites byte-identical artifacts (spec-pinned).
@@ -71,7 +84,7 @@ object RagIndexJob {
 
   private[graft] val Dim = 64
 
-  private def foldBytes(bytes: Array[Byte]): Array[Long] = {
+  private[graft] def foldBytes(bytes: Array[Byte]): Array[Long] = {
     val acc = new Array[Long](Dim)
     var i = 0
     while (i < bytes.length) { acc(i % Dim) += (bytes(i) & 0xff).toLong; i += 1 }
@@ -128,22 +141,26 @@ object RagIndexJob {
     new Path(indexRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Heal any maintenance swap a crash left half-done; every entry point
-    * that reads the root calls this first. */
+  /** Heal any maintenance swap a crash left half-done; every writer calls
+    * this first. */
   private def recoverRoot(spark: SparkSession, indexRoot: String): Unit =
     PartitionSwap.recoverDir(rootFs(spark, indexRoot), new Path(indexRoot))
+
+  /** Data files of the live index artifact, or None while its dir is
+    * missing (no build yet, or a swap between its two renames). */
+  private def liveFiles(spark: SparkSession, indexRoot: String)
+      : Option[Seq[FileStatus]] =
+    try Some(rootFs(spark, indexRoot)
+      .listStatus(new Path(s"$indexRoot/index.parquet")).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith(".")))
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Data files currently under the index artifact (append debt =
     * anything beyond the build's global layout). */
   private[graft] def indexDataFiles(spark: SparkSession,
-      indexRoot: String): Int = {
-    val fs = rootFs(spark, indexRoot)
-    val dir = new Path(s"$indexRoot/index.parquet")
-    if (!fs.exists(dir)) 0
-    else fs.listStatus(dir).count(f => f.isFile &&
-      !f.getPath.getName.startsWith("_") &&
-      !f.getPath.getName.startsWith("."))
-  }
+      indexRoot: String): Int =
+    liveFiles(spark, indexRoot).fold(0)(_.size)
 
   private def manifestPlanes(spark: SparkSession, indexRoot: String): Int =
     spark.read.parquet(s"$indexRoot/manifest.parquet")
@@ -277,48 +294,112 @@ object RagIndexJob {
     n
   }
 
-  /** Serve path: top-k unique chunks for a query string. Reads only the
-    * query-bucket slice of the index (file/row-group pruned via the
-    * bucket-sorted layout); candidates re-rank by exact cosine over the
-    * integer vectors. Ties break on (doc_id, chunk_idx) for a total
-    * order. `multiProbe` widens the slice to every single-bit-flip
-    * neighbor bucket (the q68 trick: a near-identical chunk whose
-    * vector sits on the wrong side of ONE near-zero hyperplane lands
-    * one Hamming bit away) — planes+1 pruned slices instead of one,
-    * still never a scan of the index. */
+  /** One indexed chunk as a lookup ranks it; `nq` is its squared norm. */
+  private final case class Chunk(docId: Long, chunkIdx: Long,
+      qa: Array[Long], nq: Long, text: String)
+
+  /** One index version in memory: the manifest's plane weights and each
+    * bucket's chunks. `key` is the listing it was read from. */
+  private final class Snapshot(val key: Seq[(String, Long, Long)],
+      val planes: IndexedSeq[Array[Long]], val buckets: Map[Long, Array[Chunk]])
+
+  /** At most one snapshot per index root. */
+  private val snapshots = new ConcurrentHashMap[String, Snapshot]()
+
+  /** Drops every snapshot, so each root's next lookup reloads. */
+  private[graft] def clearSnapshots(): Unit = snapshots.clear()
+
+  private def keyOf(files: Seq[FileStatus]): Seq[(String, Long, Long)] =
+    files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      .sorted
+
+  /** Reads the manifest, then exactly the listed files. A swap in between
+    * removes those files, so the read fails instead of pairing a new
+    * manifest with an old index. */
+  private def load(spark: SparkSession, indexRoot: String,
+      files: Seq[FileStatus]): Snapshot = {
+    val planes =
+      (0 until manifestPlanes(spark, indexRoot)).map(SimOps.planeWeights)
+    val chunks = spark.read.parquet(files.map(_.getPath.toString): _*)
+      .select("bucket", "doc_id", "chunk_idx", "qa", "chunk_text")
+      .collect().map { r =>
+        val qa = r.getSeq[Long](3).toArray
+        r.getLong(0) -> Chunk(r.getLong(1), r.getLong(2), qa,
+          SimOps.dotExact(qa, qa), r.getString(4))
+      }
+    new Snapshot(keyOf(files), planes, chunks.groupMap(_._1)(_._2))
+  }
+
+  /** The snapshot of the live version: from memory while the listing is
+    * unchanged, else loaded once however many lookups ask for it at the
+    * same time. With the live dir missing, the cached version serves;
+    * with none cached, the lookup fails and moves nothing. */
+  private def snapshot(spark: SparkSession, indexRoot: String): Snapshot =
+    liveFiles(spark, indexRoot) match {
+      case None => Option(snapshots.get(indexRoot)).getOrElse(
+        throw new IllegalStateException(s"no live index at $indexRoot and " +
+          "none loaded; if a maintenance swap was cut short, maintain " +
+          "recovers it"))
+      case Some(files) =>
+        val key = keyOf(files)
+        val cur = snapshots.get(indexRoot)
+        if (cur != null && cur.key == key) cur
+        else snapshots.compute(indexRoot, (_: String, c: Snapshot) =>
+          if (c != null && c.key == key) c else load(spark, indexRoot, files))
+    }
+
+  private val HitSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("chunk_idx", LongType),
+    StructField("bucket", LongType), StructField("cosine", DoubleType),
+    StructField("chunk_text", StringType)))
+
+  /** Cosine descending as Spark orders doubles (NaN equals NaN and sorts
+    * above every number), then doc_id, then chunk_idx. */
+  private val HitOrder: Ordering[(Double, Long, Long)] = Ordering.Tuple3(
+    Ordering.fromLessThan[Double]((a, b) =>
+      a != b && java.lang.Double.compare(a, b) > 0),
+    Ordering.Long, Ordering.Long)
+
+  /** Serve path: top-k unique chunks for a query string, from the live
+    * version's snapshot (no Spark job while the index is unchanged).
+    * Candidates are the query bucket's chunks, re-ranked by exact cosine
+    * over the integer vectors; ties break on (doc_id, chunk_idx) for a
+    * total order. `multiProbe` widens the candidates to every
+    * single-bit-flip neighbor bucket (the q68 trick: a near-identical
+    * chunk whose vector sits on the wrong side of ONE near-zero
+    * hyperplane lands one Hamming bit away) — planes+1 buckets instead of
+    * one, still never the whole index.
+    *
+    * The arithmetic is what the Spark plan `bucketExpr` + cosine would
+    * run under ANSI mode (the session default): long dot and norms that
+    * throw on overflow, the norm product in double (both squared norms
+    * can reach ~1e10, so their long product could overflow), and a zero
+    * divisor — an empty query — throws. */
   def lookup(spark: SparkSession, indexRoot: String, queryText: String,
       k: Int, multiProbe: Boolean = false): DataFrame = {
-    import spark.implicits._
-    recoverRoot(spark, indexRoot)
-    val planes = manifestPlanes(spark, indexRoot)
+    val snap = snapshot(spark, indexRoot)
     val qa = foldBytes(
       queryText.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the query rides the SAME bucket expression the build used, on a
-    // 1-row frame — no reimplementation that could drift
-    val qBucket = Seq(Tuple1(qa)).toDF("qa")
-      .select(SimOps.bucketExpr(planes).as("b")).collect()(0).getLong(0)
+    val qBucket = SimOps.bucketOf(qa, snap.planes)
     val probed: Seq[Long] =
-      if (multiProbe) qBucket +: (0 until planes).map(p => qBucket ^ (1L << p))
+      if (multiProbe)
+        qBucket +: snap.planes.indices.map(p => qBucket ^ (1L << p))
       else Seq(qBucket)
     val qNorm = qa.foldLeft(0d)((s, v) => s + v.toDouble * v.toDouble)
-    spark.read.parquet(s"$indexRoot/index.parquet")
-      .filter(col("bucket").isin(probed: _*))
-      .withColumn("dot",
-        aggregate(zip_with(col("qa"), lit(qa), (x, w) => x * w),
-          lit(0L), (acc, t) => acc + t))
-      .withColumn("nq",
-        aggregate(transform(col("qa"), x => x * x), lit(0L),
-          (acc, t) => acc + t))
-      // norm product in double: both squared norms can reach ~1e10, and
-      // their long product would overflow; the cosine is serve-side
-      // ranking only (no oracle twin), so IEEE is the right type
-      .withColumn("cosine",
-        col("dot").cast("double") /
-          sqrt(col("nq").cast("double") * lit(qNorm)))
-      .orderBy(col("cosine").desc, col("doc_id").asc, col("chunk_idx").asc)
-      .limit(k)
-      .select(col("doc_id"), col("chunk_idx"), col("bucket"),
-        col("cosine"), col("chunk_text"))
+    val hits = probed.flatMap { b =>
+      snap.buckets.getOrElse(b, Array.empty[Chunk]).map { c =>
+        val norms = math.sqrt(c.nq.toDouble * qNorm)
+        if (norms == 0d)
+          throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero: " +
+            s"chunk (${c.docId}, ${c.chunkIdx}) or the query has a zero vector")
+        (SimOps.dotExact(c.qa, qa).toDouble / norms, b, c)
+      }
+    }
+    val top = hits.sortBy { case (cos, _, c) => (cos, c.docId, c.chunkIdx) }(
+      HitOrder).take(k)
+    spark.createDataFrame(top.map { case (cos, b, c) =>
+      Row(c.docId, c.chunkIdx, b, cos, c.text)
+    }.asJava, HitSchema)
   }
 
   private val Usage =

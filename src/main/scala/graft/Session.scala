@@ -10,11 +10,14 @@ import org.apache.spark.sql.SparkSession
   * a cluster master is honoured and a local run needs no flags. */
 object Session {
 
-  /** A copy of `base` plus the caller's `defaults`, then `local[*]`, UTC
-    * and no UI, each set only where the key is still missing. */
+  /** A copy of `base` plus the caller's `defaults`, then `local[*]`, UTC,
+    * no UI and a warehouse under the temp dir (not the start directory),
+    * each set only where the key is still missing. */
   def conf(base: SparkConf, defaults: Seq[(String, String)]): SparkConf =
     (defaults ++ Seq("spark.master" -> "local[*]",
-      "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false"))
+      "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false",
+      "spark.sql.warehouse.dir" ->
+        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse"))
       .foldLeft(base.clone) { case (c, (k, v)) => c.setIfMissing(k, v) }
 
   /** Unless `spark.sql.shuffle.partitions` was given, it follows the

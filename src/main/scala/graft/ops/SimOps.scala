@@ -120,7 +120,7 @@ object SimOps {
     * Weights are precomputed driver-side (DedupOps.h60 — the same md5
     * formula the SQL oracle evaluates inline) and embedded as array
     * literals: the md5 calls never reach the per-row hot path. */
-  private def planeWeights(p: Int): Array[Long] =
+  private[graft] def planeWeights(p: Int): Array[Long] =
     Array.tabulate(D)(i => DedupOps.h60(s"h:$p:$i") % 2001 - 1000)
 
   private[graft] def bucketExpr(planes: Int): Column =
@@ -130,6 +130,27 @@ object SimOps {
         lit(0L), (acc, t) => acc + t)
       when(dot > 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
+
+  /** Integer dot over the common prefix of `a` and `b`, in exact long
+    * arithmetic: an overflow throws, as it does under Spark's ANSI mode. */
+  private[graft] def dotExact(a: Array[Long], b: Array[Long]): Long = {
+    var dot = 0L
+    var i = 0
+    while (i < math.min(a.length, b.length)) {
+      dot = Math.addExact(dot, Math.multiplyExact(a(i), b(i))); i += 1
+    }
+    dot
+  }
+
+  /** [[bucketExpr]] evaluated in-process for one vector, given the planes'
+    * weights ([[planeWeights]] of 0 until P): the same integer math. A
+    * length mismatch makes Spark's `zip_with` pad with NULL, so that
+    * plane's dot is NULL and its bit is 0; the same holds here. */
+  private[graft] def bucketOf(qa: Array[Long], planes: Seq[Array[Long]]): Long =
+    planes.indices.foldLeft(0L) { (b, p) =>
+      val dot = dotExact(qa, planes(p))
+      if (qa.length == planes(p).length && dot > 0) b + (1L << p) else b
+    }
 
   /** Oracle bucket over a dynamic plane count: `np` is a column (from the
     * `params` CTE in [[sqlEmb]]) so the oracle scales its bucket count

@@ -1,5 +1,13 @@
 package graft
 
+import java.io.File
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Try
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -206,5 +214,187 @@ class RagIndexJobSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("bucket"),
       s"bucket filter not pushed to the index scan:\n$plan")
+  }
+
+  /** A lookup as one Spark plan: read the manifest, bucket the query on a
+    * 1-row frame with `bucketExpr`, scan the probed buckets' slice and
+    * rank there. The reference the in-memory lookup must equal. */
+  private def referenceLookup(dir: String, queryText: String, k: Int,
+      multiProbe: Boolean): DataFrame = {
+    import spark.implicits._
+    val planes = spark.read.parquet(s"$dir/manifest.parquet")
+      .collect()(0).getAs[Int]("planes")
+    val qa = RagIndexJob.foldBytes(queryText.getBytes("UTF-8"))
+    val qBucket = Seq(Tuple1(qa)).toDF("qa")
+      .select(ops.SimOps.bucketExpr(planes).as("b")).collect()(0).getLong(0)
+    val probed: Seq[Long] =
+      if (multiProbe) qBucket +: (0 until planes).map(p => qBucket ^ (1L << p))
+      else Seq(qBucket)
+    val qNorm = qa.foldLeft(0d)((s, v) => s + v.toDouble * v.toDouble)
+    spark.read.parquet(s"$dir/index.parquet")
+      .filter(col("bucket").isin(probed: _*))
+      .withColumn("dot",
+        aggregate(zip_with(col("qa"), lit(qa), (x, w) => x * w),
+          lit(0L), (acc, t) => acc + t))
+      .withColumn("nq",
+        aggregate(transform(col("qa"), x => x * x), lit(0L),
+          (acc, t) => acc + t))
+      .withColumn("cosine",
+        col("dot").cast("double") /
+          sqrt(col("nq").cast("double") * lit(qNorm)))
+      .orderBy(col("cosine").desc, col("doc_id").asc, col("chunk_idx").asc)
+      .limit(k)
+      .select(col("doc_id"), col("chunk_idx"), col("bucket"),
+        col("cosine"), col("chunk_text"))
+  }
+
+  /** Exact chunk texts spread over the index (md5 order mixes old and
+    * new documents), each also with its first word replaced, plus
+    * out-of-corpus texts and the empty query. */
+  private def probeQueries(dir: String): Seq[String] = {
+    val exact = spark.read.parquet(s"$dir/index.parquet")
+      .filter(col("n_toks") >= 8).orderBy(col("chunk_md5")).limit(6)
+      .collect().map(_.getAs[String]("chunk_text")).toSeq
+    exact ++ exact.map(_.replaceFirst("^\\S+", "zyzzyva")) ++
+      Seq("w17 w404 w931 quokka lattice", "qqqq", "")
+  }
+
+  /** Rows (or the arithmetic error) of one lookup. */
+  private def outcome(df: => DataFrame): Either[String, Seq[Row]] =
+    Try(df.collect().toSeq).toEither.left.map {
+      case _: ArithmeticException => "ArithmeticException"
+      case e => throw e
+    }
+
+  private def assertServesLikeReference(dir: String, state: String): Unit = {
+    val served = for (q <- probeQueries(dir); mp <- Seq(false, true)) yield {
+      val want = outcome(referenceLookup(dir, q, 10, mp))
+      val got = outcome(RagIndexJob.lookup(spark, dir, q, 10, mp))
+      assert(got == want, s"$state: query '$q' multiProbe=$mp")
+      if (want.isRight) {
+        def cols(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+        assert(cols(RagIndexJob.lookup(spark, dir, q, 10, mp)) ==
+          cols(referenceLookup(dir, q, 10, mp)), state)
+      }
+      want.exists(_.nonEmpty)
+    }
+    // at least every exact query, single- and multi-probe, found rows
+    assert(served.count(identity) >= 12, state)
+  }
+
+  private def writeDocs(docs: Seq[(Long, String)]): String = {
+    import spark.implicits._
+    val batch = java.nio.file.Files.createTempDirectory("rag-docs").toString
+    docs.map { case (id, t) => (id, t, "en", "srcS", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$batch/documents.parquet")
+    batch
+  }
+
+  test("lookup serves what the Spark lookup plan returns after build, update, compact and retune") {
+    val dir = java.nio.file.Files.createTempDirectory("rag-equiv").toString
+    val (_, _, p0) = RagIndexJob.build(spark, sf, dir)
+    assertServesLikeReference(dir, "build")
+    // 600 novel documents: append debt past the compaction threshold and
+    // enough growth to drift the pinned plane count
+    val grow = writeDocs((1 to 600).map { d =>
+      (930000L + d, (1 to 40).map(i => s"equivterm${d}x$i").mkString(" "))
+    })
+    assert(RagIndexJob.update(spark, grow, dir) > 0L)
+    assertServesLikeReference(dir, "update")
+    val (before, after) = RagIndexJob.compact(spark, dir, maxFiles = 8)
+    assert(after < before, s"compact $before->$after")
+    assertServesLikeReference(dir, "compact")
+    assert(RagIndexJob.retunePlanes(spark, dir).exists(_ != p0))
+    assertServesLikeReference(dir, "retune")
+    // the empty query's zero norm makes the plan divide by zero, and so
+    // does the snapshot's rank
+    assert(outcome(RagIndexJob.lookup(spark, dir, "", 10, true)) ==
+      Left("ArithmeticException"))
+  }
+
+  test("bucketOf equals the bucket column bucketExpr wrote, row for row") {
+    val (_, dir) = root
+    val planes = spark.read.parquet(s"$dir/manifest.parquet")
+      .collect()(0).getAs[Int]("planes")
+    val weights = (0 until planes).map(ops.SimOps.planeWeights)
+    val rows = spark.read.parquet(s"$dir/index.parquet")
+      .select("qa", "bucket").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(ops.SimOps.bucketOf(r.getSeq[Long](0).toArray, weights) ==
+        r.getLong(1))
+    }
+    // a vector of the wrong length: zip_with pads with NULL, every bit is 0
+    import spark.implicits._
+    val short = Array(5L, -3L, 7L)
+    assert(Seq(Tuple1(short)).toDF("qa")
+      .select(ops.SimOps.bucketExpr(planes)).collect()(0).getLong(0) == 0L)
+    assert(ops.SimOps.bucketOf(short, weights) == 0L)
+  }
+
+  test("a repeated lookup runs no Spark job; the first after an update runs only the reload") {
+    val dir = java.nio.file.Files.createTempDirectory("rag-jobs").toString
+    RagIndexJob.build(spark, sf, dir)
+    val q = spark.read.parquet(s"$dir/index.parquet")
+      .filter(col("n_toks") >= 8).orderBy(col("chunk_md5"))
+      .collect()(3).getAs[String]("chunk_text")
+    val sc = spark.sparkContext
+    val group = "rag-index-job-spec-lookup"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      ListenerBusDrain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "lookup")
+      try f finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      RagIndexJob.clearSnapshots()
+      val reload = jobsOf(RagIndexJob.lookup(spark, dir, q, 10).collect())
+      assert(reload > 0)
+      assert(jobsOf(RagIndexJob.lookup(spark, dir, q, 10).collect()) == 0)
+      assert(jobsOf(RagIndexJob.lookup(spark, dir, "qqqq", 10,
+        multiProbe = true).collect()) == 0)
+      val batch = writeDocs(Seq(940001L ->
+        (1 to 40).map(i => s"jobsterm$i").mkString(" ")))
+      assert(RagIndexJob.update(spark, batch, dir) > 0L)
+      assert(jobsOf(RagIndexJob.lookup(spark, dir, q, 10).collect()) == reload)
+      assert(jobsOf(RagIndexJob.lookup(spark, dir, q, 10).collect()) == 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a lookup between a swap's renames serves its snapshot and repairs nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("rag-swap").toString
+    RagIndexJob.build(spark, sf, dir)
+    val q = spark.read.parquet(s"$dir/index.parquet")
+      .filter(col("n_toks") >= 8).orderBy(col("chunk_md5"))
+      .collect()(5).getAs[String]("chunk_text")
+    val warm = RagIndexJob.lookup(spark, dir, q, 5).collect().toSeq
+    assert(warm.nonEmpty)
+    // the state swapDir leaves between moving live aside and publishing
+    val live = new File(dir)
+    val prev = new File(dir + "__prev")
+    assert(live.renameTo(prev))
+    assert(RagIndexJob.lookup(spark, dir, q, 5).collect().toSeq == warm)
+    assert(!live.exists && prev.exists)
+    // with nothing loaded, the lookup fails and still moves nothing
+    RagIndexJob.clearSnapshots()
+    val e = intercept[IllegalStateException](
+      RagIndexJob.lookup(spark, dir, q, 5))
+    assert(e.getMessage.contains("no live index"))
+    assert(!live.exists && prev.exists)
+    // the writer's maintenance recovers the root, and lookups serve again
+    assert(RagIndexJob.maintain(spark, dir) == "noop")
+    assert(live.exists && !prev.exists)
+    assert(RagIndexJob.lookup(spark, dir, q, 5).collect().toSeq == warm)
   }
 }

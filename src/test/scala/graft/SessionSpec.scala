@@ -22,7 +22,9 @@ class SessionSpec extends AnyFunSuite {
   test("an empty conf gets local[*], UTC and no UI, and nothing else") {
     val c = Session.conf(empty, Nil)
     assert(c.getAll.toMap == Map("spark.master" -> "local[*]",
-      "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false"))
+      "spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false",
+      "spark.sql.warehouse.dir" ->
+        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse"))
   }
 
   test("a caller default applies only where the key is missing") {
