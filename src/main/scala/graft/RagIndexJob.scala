@@ -12,12 +12,10 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 
 import ops.{CurationOps, PartitionSwap, SimOps}
 
-/** End-to-end retrieval-index job — the SERVING-side complement of
-  * [[CurationJob]]'s training-side pipeline: where CurationJob turns raw
-  * documents into training shards, this job turns the same corpus into a
+/** End-to-end retrieval-index job: it turns the corpus into a
   * chunk-level ANN index an embedding-retrieval (RAG) service reads.
   *
-  * Build (`runMain graft.RagIndexJob <sfDir> <indexRoot>`):
+  * Build (`runMain graft.RagIndexJob build <sfDir> <indexRoot>`):
   *
   *   1. chunking — the q145 token-window lattice (width 32 / stride 24,
   *      case-preserving), via [[CurationOps.docChunks]];
@@ -374,24 +372,27 @@ object RagIndexJob {
     * run under ANSI mode (the session default): long dot and norms that
     * throw on overflow, the norm product in double (both squared norms
     * can reach ~1e10, so their long product could overflow), and a zero
-    * divisor — an empty query — throws. */
+    * divisor throws. A query whose vector is all zero (the empty string)
+    * has no direction to rank by and returns no rows without probing; a
+    * zero STORED vector means a corrupt index and throws. */
   def lookup(spark: SparkSession, indexRoot: String, queryText: String,
       k: Int, multiProbe: Boolean = false): DataFrame = {
     val snap = snapshot(spark, indexRoot)
     val qa = foldBytes(
       queryText.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val qBucket = SimOps.bucketOf(qa, snap.planes)
+    val qNorm = qa.foldLeft(0d)((s, v) => s + v.toDouble * v.toDouble)
     val probed: Seq[Long] =
-      if (multiProbe)
+      if (qNorm == 0d) Nil
+      else if (multiProbe)
         qBucket +: snap.planes.indices.map(p => qBucket ^ (1L << p))
       else Seq(qBucket)
-    val qNorm = qa.foldLeft(0d)((s, v) => s + v.toDouble * v.toDouble)
     val hits = probed.flatMap { b =>
       snap.buckets.getOrElse(b, Array.empty[Chunk]).map { c =>
         val norms = math.sqrt(c.nq.toDouble * qNorm)
         if (norms == 0d)
           throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero: " +
-            s"chunk (${c.docId}, ${c.chunkIdx}) or the query has a zero vector")
+            s"chunk (${c.docId}, ${c.chunkIdx}) has a zero vector")
         (SimOps.dotExact(c.qa, qa).toDouble / norms, b, c)
       }
     }
@@ -406,8 +407,7 @@ object RagIndexJob {
     """usage: RagIndexJob build <sfDir> <indexRoot>
       |       RagIndexJob update <batchDir> <indexRoot>
       |       RagIndexJob maintain <indexRoot>
-      |       RagIndexJob lookup <indexRoot> <queryText> [k]
-      |       RagIndexJob <sfDir> <indexRoot>          (legacy = build)""".stripMargin
+      |       RagIndexJob lookup <indexRoot> <queryText> [k]""".stripMargin
 
   def main(args: Array[String]): Unit = {
     val spark = Session("graft-rag-index-job")
@@ -427,10 +427,6 @@ object RagIndexJob {
             s" chunk=${r.getAs[Long]("chunk_idx")}" +
             f" cos=${r.getAs[Double]("cosine")}%.4f")
         }
-      case sfDir :: root :: Nil
-          if !Set("build", "update", "maintain", "lookup")(sfDir) =>
-        val (n, u, p) = build(spark, sfDir, root)
-        println(s"[rag-index-job] indexed $u unique of $n chunks, $p planes")
       case _ => System.err.println(Usage); sys.exit(2)
     }
     spark.stop()

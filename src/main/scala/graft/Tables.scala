@@ -42,7 +42,7 @@ object Tables {
     * its untouched scan-local plan, because there a blanket repartition
     * would shuffle the whole corpus for nothing (guide §8's anti-pattern).
     * Opt-in via spark.graft.scan.autoParallelize: set by the
-    * registry-sweep mains (Verify, PlanDump), off for library
+    * registry-sweep main (Verify), off for library
     * embedders and the plan-shape suite, which asserts on the scan-local
     * shapes that hold at scale. */
   // below: dimension-table-sized. Conf-overridable (see maybeSpread) so a

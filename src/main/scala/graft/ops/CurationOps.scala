@@ -51,7 +51,7 @@ object CurationOps {
 
   /** The scrub pass as a reusable Column transform (email → ip → phone,
     * the q70 order contract). */
-  private[graft] def scrub(c: Column): Column =
+  private def scrub(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(c,
       emailRe, "<EMAIL>"), ipRe, "<IP>"), phoneRe, "<PHONE>")
 
@@ -389,8 +389,7 @@ object CurationOps {
   /** Per-doc chunk assignment via the THREE-level bucketed prefix sum:
     * the input must carry (doc_id, n_tok); the result adds `start` (the
     * doc's first-token offset in the doc_id-ordered concatenation) and
-    * `chunk_id` (= start div chunkTokens). Shared by q74/q83 and the
-    * CurationJob shard writer.
+    * `chunk_id` (= start div chunkTokens). Shared by q74/q83.
     *
     * Levels: local_start within a width-W doc_id bucket (window
     * partitioned by bucket), bucket offsets within a W² super-bucket
@@ -430,7 +429,7 @@ object CurationOps {
 
   /** Token count of a text column under the engine's whitespace
     * tokenizer (empty tokens excluded). */
-  private[graft] def tokenCount(c: Column): Column =
+  private def tokenCount(c: Column): Column =
     size(filter(toks(c), x => x =!= "")).cast("long")
 
   def q74SeqPacking(s: SparkSession, d: String): DataFrame =

@@ -144,37 +144,6 @@ object DedupOps {
     * so the result no longer references the path at all. Unpersist via
     * the returned frame when done. */
   def incrementalDedup(batch: DataFrame, storeDir: String): DataFrame = {
-    val staged = incrementalDedupStaged(batch, storeDir)
-    staged.commit()
-    staged.novel
-  }
-
-  /** A dedup firing whose store append is DEFERRED: [[novel]] is the
-    * pinned (eagerly checkpointed) novel set, usable immediately;
-    * [[commit]] performs the store append and must run only AFTER the
-    * caller has durably written the firing's output. Rationale: if the
-    * store grows before the output commits and the job crashes between
-    * the two, the rerun self-matches every doc and ships an EMPTY firing
-    * — the batch is recorded as shipped but never ships (silent loss).
-    * Deferring flips the failure mode to at-least-once: a crash between
-    * output write and commit() reships the batch on rerun, which the
-    * downstream can see and reconcile, instead of silently dropping it. */
-  final case class StagedDedup(novel: DataFrame, commit: () => Unit)
-
-  /** [[incrementalDedup]] with the store append staged behind
-    * [[StagedDedup.commit]]. */
-
-  /** Store existence through the SAME filesystem abstraction the
-    * read/write path uses — `java.io.File` silently answers false for
-    * hdfs://, s3a://, etc., which would skip the anti-join and admit
-    * every duplicate as novel on a cluster store. */
-  private def storeExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  def incrementalDedupStaged(batch: DataFrame, storeDir: String)
-      : StagedDedup = {
     val s = batch.sparkSession
     val hashed = batch.withColumn("content_md5", md5(col("text")))
     val inBatch = hashed
@@ -188,9 +157,18 @@ object DedupOps {
           "left_anti")
       else inBatch
     val pinned = novel.localCheckpoint(true)
-    StagedDedup(pinned, () =>
-      pinned.select(col("content_md5"))
-        .write.mode("append").parquet(storeDir))
+    pinned.select(col("content_md5"))
+      .write.mode("append").parquet(storeDir)
+    pinned
+  }
+
+  /** Store existence through the SAME filesystem abstraction the
+    * read/write path uses — `java.io.File` silently answers false for
+    * hdfs://, s3a://, etc., which would skip the anti-join and admit
+    * every duplicate as novel on a cluster store. */
+  private def storeExists(s: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** MinHash OR-band count — the RECALL knob, not a bucket-occupancy
@@ -245,9 +223,8 @@ object DedupOps {
   // ---- Shared near-dup pipeline stage (q31/q60/q102/q116/q123) ---------
   // Five queries consume the SAME shingle→minhash→band-join→intersect
   // derivation; standalone they executed it five times (13% of the r5
-  // bench). The production posture (`CurationJob`) materializes derived
-  // stages once and fans out; the query registry now does the same: the
-  // banded-candidate table (id1, id2, inter, n1, n2 — sizes + exact
+  // bench). The query registry materializes the derivation once and fans
+  // out: the banded-candidate table (id1, id2, inter, n1, n2 — sizes + exact
   // intersection over the 60-bit shingle hashes, BEFORE any threshold) is
   // computed once per (session, dataset) and pinned via eager
   // localCheckpoint. RDD-level checkpoint blocks are NOT CacheManager
@@ -266,10 +243,6 @@ object DedupOps {
   private def cachedStage(s: SparkSession, d: String, stage: String)
       (compute: => DataFrame): DataFrame =
     StageCache.getOrCompute(s, d, stage)(compute)
-
-  /** Drop all pinned shared stages (tests / long-lived sessions that
-    * mutate the underlying documents table between runs). */
-  def clearStageCache(): Unit = StageCache.clearAll()
 
   /** Banded candidate pairs with exact hash-set intersection — the shared
     * expensive stage. Two deliberate hot-path choices carried over from
@@ -1119,20 +1092,6 @@ $sqlJac,
     * store appends (the CacheManager.recacheByPath lesson, see
     * [[incrementalDedup]]). */
   def incrementalNearDup(batch: DataFrame, storeDir: String): DataFrame = {
-    val staged = incrementalNearDupStaged(batch, storeDir)
-    staged.commit()
-    staged.novel
-  }
-
-  /** [[incrementalNearDup]] with the store appends staged behind
-    * [[StagedDedup.commit]] (see there for the crash-ordering
-    * rationale). Within the commit, `features/` writes BEFORE `bands/`:
-    * the candidate verify join is band→feature inner, so an orphan
-    * FEATURE row (crash between the two appends) is unreachable dead
-    * data, while an orphan BAND row would silently drop every candidate
-    * it blocks in later firings. */
-  def incrementalNearDupStaged(batch: DataFrame, storeDir: String)
-      : StagedDedup = {
     val s = batch.sparkSession
     val bandsDir = s"$storeDir/bands"
     val featDir = s"$storeDir/features"
@@ -1175,11 +1134,14 @@ $sqlJac,
       .join(withinDrop.union(crossDrop), Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
     feat.unpersist()
-    StagedDedup(novel, () => {
-      novelFeat.select(col("doc_id"), col("hv"))
-        .write.mode("append").parquet(featDir)
-      bandRows(novelFeat).write.mode("append").parquet(bandsDir)
-    })
+    // `features/` writes BEFORE `bands/`: the candidate verify join is
+    // band→feature inner, so an orphan FEATURE row (crash between the two
+    // appends) is unreachable dead data, while an orphan BAND row would
+    // silently drop every candidate it blocks in later firings.
+    novelFeat.select(col("doc_id"), col("hv"))
+      .write.mode("append").parquet(featDir)
+    bandRows(novelFeat).write.mode("append").parquet(bandsDir)
+    novel
   }
 
   // ---- q110: inter-source corpus overlap (MinHash sketch Jaccard) ------

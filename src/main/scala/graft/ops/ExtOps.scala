@@ -653,9 +653,8 @@ object ExtOps {
   // and one aggregate per (user, session) yields size/duration/entry
   // type. Reported as the (entry_type × size-decade) histogram with
   // exact ppm shares and observed duration support — the session-length
-  // model SynthEventsJob's uniform-length draw approximates, and the
-  // shape a capacity planner reads (how long do sessions run, what
-  // opens them).
+  // model, and the shape a capacity planner reads (how long do sessions
+  // run, what opens them).
   //
   // Exactness: gaps and durations are truncating micro→second divs of
   // nonnegative integers; decade banding is digit count (band −1 would

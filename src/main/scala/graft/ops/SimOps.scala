@@ -202,10 +202,6 @@ object SimOps {
         bucketExpr(planesFor(Tables.rowCount(s, d, "embeddings"))))
       .select(col("vec_id"), col("bucket"))
 
-  /** Un-pinned twin for plan guards (the bandCandidatesPlan pattern). */
-  private[graft] def lshAssignmentPlan(s: SparkSession, d: String): DataFrame =
-    buildLshAssignment(s, d)
-
   /** The corpus with payload + pinned bucket — the shape every LSH
     * consumer starts from. */
   private def lshCorpus(s: SparkSession, d: String): DataFrame =

@@ -20,18 +20,16 @@ import org.apache.spark.sql.SparkSession
   */
 object SinkMaintenance {
 
-  /** The data files of one directory — the single definition of "what
-    * counts" shared by compaction and [[graft.LayoutJob]]'s audit, so
-    * the audit's `fragmented` verdict and what compaction actually
-    * rewrites can never diverge. */
-  private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+  /** The data files of one directory: skips `_`- and `.`-prefixed
+    * committer and checksum files. */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): Array[org.apache.hadoop.fs.FileStatus] =
     fs.listStatus(dir).filter(f => f.isFile
       && !f.getPath.getName.startsWith("_")
       && !f.getPath.getName.startsWith("."))
 
-  /** The shared fragmentation criterion (see [[dataFiles]]). */
-  private[graft] def isFragmented(nFiles: Int, maxFiles: Int): Boolean =
+  /** The fragmentation criterion: more data files than `maxFiles`. */
+  private def isFragmented(nFiles: Int, maxFiles: Int): Boolean =
     nFiles > maxFiles
 
   /** Rewrite every partition of `sinkPath` whose data-file count exceeds

@@ -124,7 +124,7 @@ object Skew {
       write
     }
 
-  private[graft] def bucketedDocTables(
+  private def bucketedDocTables(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val ver = java.lang.Long.toHexString(StageCache.version(d))
     val docsT = s"graft_docs_b_$ver"

@@ -317,33 +317,6 @@ class DedupOpsSpec extends AnyFunSuite {
       b.select("doc_id").distinct().as[Long].collect().sorted.toSeq == acc)
   }
 
-  test("staged dedup defers the store append until commit()") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("staged-store").toString
-    val txt = "alpha bravo charlie delta echo foxtrot golf hotel india" +
-      " juliet kilo lima mike november oscar papa quebec romeo sierra"
-    val b = Seq((1L, txt)).toDF("doc_id", "text")
-    // exact: a crash before commit leaves no store — the rerun RESHIPS
-    val s1 = ops.DedupOps.incrementalDedupStaged(b, s"$root/fp")
-    assert(s1.novel.count() == 1)
-    assert(!new java.io.File(s"$root/fp").exists(),
-      "store grew before commit - the crash window this API closes")
-    val s1b = ops.DedupOps.incrementalDedupStaged(b, s"$root/fp")
-    assert(s1b.novel.count() == 1)
-    s1b.commit()
-    assert(ops.DedupOps.incrementalDedup(b, s"$root/fp").count() == 0)
-    // near-dup: same contract, and commit writes features before bands
-    val s2 = ops.DedupOps.incrementalNearDupStaged(b, s"$root/nd")
-    assert(s2.novel.count() == 1)
-    assert(!new java.io.File(s"$root/nd/bands").exists() &&
-      !new java.io.File(s"$root/nd/features").exists())
-    s2.commit()
-    assert(spark.read.parquet(s"$root/nd/features").count() == 1 &&
-      spark.read.parquet(s"$root/nd/bands").count() == 8)
-    assert(ops.DedupOps.incrementalNearDup(b, s"$root/nd").count() == 0)
-  }
-
   test("q60 groups cover exactly the docs in q31 pairs; canonical is the min") {
     val g = DedupOps.q60DedupGroups(spark, sf)
     val rows = g.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

@@ -227,10 +227,13 @@ class RagIndexJobSpec extends AnyFunSuite {
     val qa = RagIndexJob.foldBytes(queryText.getBytes("UTF-8"))
     val qBucket = Seq(Tuple1(qa)).toDF("qa")
       .select(ops.SimOps.bucketExpr(planes).as("b")).collect()(0).getLong(0)
-    val probed: Seq[Long] =
-      if (multiProbe) qBucket +: (0 until planes).map(p => qBucket ^ (1L << p))
-      else Seq(qBucket)
     val qNorm = qa.foldLeft(0d)((s, v) => s + v.toDouble * v.toDouble)
+    // an all-zero query vector has no direction: no bucket is probed
+    val probed: Seq[Long] =
+      if (qNorm == 0d) Nil
+      else if (multiProbe)
+        qBucket +: (0 until planes).map(p => qBucket ^ (1L << p))
+      else Seq(qBucket)
     spark.read.parquet(s"$dir/index.parquet")
       .filter(col("bucket").isin(probed: _*))
       .withColumn("dot",
@@ -307,10 +310,11 @@ class RagIndexJobSpec extends AnyFunSuite {
     assertServesLikeReference(dir, "compact")
     assert(RagIndexJob.retunePlanes(spark, dir).exists(_ != p0))
     assertServesLikeReference(dir, "retune")
-    // the empty query's zero norm makes the plan divide by zero, and so
-    // does the snapshot's rank
-    assert(outcome(RagIndexJob.lookup(spark, dir, "", 10, true)) ==
-      Left("ArithmeticException"))
+    // the empty query's zero vector returns no rows, single- and
+    // multi-probe
+    for (mp <- Seq(false, true))
+      assert(outcome(RagIndexJob.lookup(spark, dir, "", 10, mp)) ==
+        Right(Seq.empty))
   }
 
   test("bucketOf equals the bucket column bucketExpr wrote, row for row") {
@@ -364,6 +368,7 @@ class RagIndexJobSpec extends AnyFunSuite {
       assert(jobsOf(RagIndexJob.lookup(spark, dir, q, 10).collect()) == 0)
       assert(jobsOf(RagIndexJob.lookup(spark, dir, "qqqq", 10,
         multiProbe = true).collect()) == 0)
+      assert(jobsOf(RagIndexJob.lookup(spark, dir, "", 10).collect()) == 0)
       val batch = writeDocs(Seq(940001L ->
         (1 to 40).map(i => s"jobsterm$i").mkString(" ")))
       assert(RagIndexJob.update(spark, batch, dir) > 0L)
