@@ -17,14 +17,19 @@ import ops.{Ingest, JdbcSink, Streaming}
   *
   * Usage: `runMain graft.NytJob <srcRoot> <sinkRoot> <checkpointRoot>
   * [jdbcUrl]` where `srcRoot/counties/` and `srcRoot/states/` hold the
-  * feed CSVs (new files accumulate between firings; the checkpoint skips
-  * files already ingested — the reference re-downloads and re-inserts the
-  * full feed every firing, we ingest each file once).
+  * feed CSVs (new files accumulate between firings; `checkpointRoot/<feed>/`
+  * holds each feed's file ledger, the names already ingested — the
+  * reference re-downloads and re-inserts the full feed every firing, we
+  * ingest each file once).
   *
-  * Each firing is O(new data): the file-source checkpoint skips seen
-  * files, and the sink merge rewrites only the date partitions present in
-  * the new batch (Streaming.ingestAvailableNow) — at years of history and
-  * a 15-minute cadence the job stays constant-size. The optional JDBC
+  * Each firing is one plain Spark batch per feed with new files and no
+  * streaming query: the ledger skips seen files, and the sink merge
+  * rewrites only the date partitions present in the new batch
+  * (Streaming.ingestAvailableNow) — at years of history and a 15-minute
+  * cadence the job stays constant-size, and a firing with no new files
+  * runs no Spark job. A checkpoint dir written by the earlier
+  * streaming-query version holds no ledger, so the first firing on it
+  * re-merges every file once; that changes no row. The optional JDBC
   * mirror replaces ONLY the same touched dates with the freshly merged
   * sink's rows for them (JdbcSink.replaceDates). That is the reference's
   * ON CONFLICT DO NOTHING result: the merge has already let stored rows
@@ -68,29 +73,31 @@ object NytJob {
         |  cases BIGINT,
         |  deaths BIGINT)""".stripMargin))
 
-  /** One "cron firing": incremental-ingest every feed, then mirror the
-    * feeds' current sinks to JDBC if a URL is given. Returns after the
-    * backlog drains. */
+  /** One "cron firing": incremental-ingest every feed, then mirror each
+    * feed's touched dates to JDBC if a URL is given. The mirror runs after
+    * the feed's publish and before its ledger commit, so a crash or a
+    * mirror failure leaves the feed's new files unrecorded: the next
+    * firing re-merges them (no sink row changes) and mirrors their dates. */
   def runOnce(spark: SparkSession, srcRoot: String, sinkRoot: String,
-              checkpointRoot: String, jdbcUrl: Option[String] = None): Unit = {
+              checkpointRoot: String, jdbcUrl: Option[String] = None): Unit =
     feeds.foreach { f =>
-      val touched = Streaming.ingestAvailableNow(spark,
+      val sink = s"$sinkRoot/${f.name}"
+      Streaming.ingestAvailableNow(spark,
         srcDir = s"$srcRoot/${f.name}",
         schema = f.schema, keys = f.keys, tiebreak = tiebreak,
         checkpoint = s"$checkpointRoot/${f.name}",
-        sinkPath = s"$sinkRoot/${f.name}")
-      jdbcUrl.filter(_ => touched.nonEmpty).foreach { url =>
-        JdbcSink.initSchema(url, f.mirrorDdl)
-        // replace ONLY this firing's dates in the DB with the freshly
-        // merged sink's rows for them (a partition-pruned read), so the
-        // firing stays O(batch) end to end
-        JdbcSink.replaceDates(
-          spark.read.parquet(s"$sinkRoot/${f.name}")
-            .select(f.schema.fieldNames.map(col).toSeq: _*),
-          url, f.jdbcTable, touched)
-      }
+        sinkPath = sink,
+        afterPublish = touched => jdbcUrl.foreach { url =>
+          JdbcSink.initSchema(url, f.mirrorDdl)
+          // replace ONLY this firing's dates in the DB with the freshly
+          // merged sink's rows for them (a partition-pruned read with the
+          // feed's schema, so no inference job), keeping the firing O(batch)
+          JdbcSink.replaceDates(
+            spark.read.schema(f.schema).parquet(sink)
+              .select(f.schema.fieldNames.map(col).toSeq: _*),
+            url, f.jdbcTable, touched)
+        })
     }
-  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,

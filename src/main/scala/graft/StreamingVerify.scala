@@ -23,8 +23,9 @@ import java.nio.file.{Files, Paths}
   * Drives:
   *  - `ingest_availablenow` — the events fixture split into 3 "cron
   *    firings" (firing 3 re-sends 50 firing-1 keys under a marker type
-  *    with perturbed values) through the checkpointed AvailableNow
-  *    ingest; twin = batch [[ops.Ingest.dedupKeepFirst]] on the union.
+  *    with perturbed values) through the file-ledger batch ingest
+  *    ([[ops.Streaming.ingestAvailableNow]]); twin = batch
+  *    [[ops.Ingest.dedupKeepFirst]] on the union.
   *  - `streaming_dedup` — the documents fixture + 60 re-sent exact dups
   *    in 4 micro-batches through the RocksDB `transformWithState` dedup;
   *    twin = batch min-doc_id-per-content-hash.
@@ -51,7 +52,7 @@ object StreamingVerify {
     def record(name: String, df: DataFrame): Unit =
       digests(name) = Verify.canonicalDigest(df)
 
-    // ---- drive 1: events through the checkpointed AvailableNow ingest
+    // ---- drive 1: events through the file-ledger batch ingest
     val evSchema = StructType(Seq(
       StructField("date", DateType), StructField("event_id", LongType),
       StructField("user_id", LongType),

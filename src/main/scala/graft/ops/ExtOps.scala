@@ -1266,7 +1266,7 @@ object ExtOps {
     GROUP BY 1 ORDER BY 1"""
 
   // ---- q89: z-order clustering keys (2-D locality audit) ---------------
-  // The layout side of SinkMaintenance.writeZOrdered as an auditable
+  // The Morton key of SinkMaintenance.zOrderKey as an auditable
   // query: orders map to a 12-bit (custkey, order-day) grid, the Morton
   // key interleaves the two coordinates, and per z-range bucket the
   // query reports both dimensions' min/max spans. The z-order locality

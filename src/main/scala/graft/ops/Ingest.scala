@@ -57,19 +57,19 @@ object Ingest {
     * DelimitedLineTokenizer + setLinesToSkip(1), .kt:98-117). Blank numeric
     * fields become true nulls (replaces intOrNull, .kt:49-50); dates parse
     * as yyyy-MM-dd (replaces parseDateString, .kt:52-61, bug-free). */
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
+  def readCsv(spark: SparkSession, schema: StructType, paths: String*): DataFrame =
     spark.read
       .schema(schema)
       .option("header", "true")
       .option("dateFormat", "yyyy-MM-dd")
       .option("mode", "PERMISSIVE")
-      .csv(path)
+      .csv(paths: _*)
 
   def readStates(spark: SparkSession, path: String): DataFrame =
-    readCsv(spark, path, statesSchema)
+    readCsv(spark, statesSchema, path)
 
   def readCounties(spark: SparkSession, path: String): DataFrame =
-    readCsv(spark, path, countiesSchema)
+    readCsv(spark, countiesSchema, path)
 
   /** A5: deterministic keep-first-per-key — the engine-side equivalent of
     * `INSERT … ON CONFLICT DO NOTHING` (.kt:138-141). Postgres DO NOTHING is
@@ -110,7 +110,7 @@ object Ingest {
   def ingest(spark: SparkSession, srcCsv: String, schema: StructType,
              keys: Seq[String], tiebreak: Seq[Column], sinkPath: String,
              partitionCols: Seq[String] = Nil): Unit = {
-    val cleaned = dedupKeepFirst(readCsv(spark, srcCsv, schema), keys, tiebreak)
+    val cleaned = dedupKeepFirst(readCsv(spark, schema, srcCsv), keys, tiebreak)
     val writer = cleaned.write.mode("overwrite")
     // SURVEY.md §4.4: at 100 TB the sink is date-partitioned
     // (.../date=yyyy-MM-dd/) so downstream scans partition-prune; callers

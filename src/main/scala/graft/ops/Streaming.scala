@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import Fx._
@@ -62,104 +64,133 @@ object Streaming {
     transform(stream.withWatermark("ts", "1 hour"))
 
   /** First-class upgrade of the reference's "incremental by rerun + dedup"
-    * loop (§2.9: cron at deploy.sh:29 + ON CONFLICT at .kt:140,177):
-    * a checkpointed file-source stream over a CSV drop directory, with
-    * `Trigger.AvailableNow` standing in for each cron firing. The
-    * checkpoint makes re-runs INCREMENTAL (already-seen files are skipped
-    * — what the reference re-downloads and re-inserts every 15 minutes),
-    * and `foreachBatch` applies the same idempotent key-merge as the batch
-    * path, so overlapping rows across files dedup exactly like ON
-    * CONFLICT. Returns after the trigger drains (call once per "cron
-    * firing").
+    * loop (§2.9: cron at deploy.sh:29 + ON CONFLICT at .kt:140,177): one
+    * plain batch per cron firing over a CSV drop directory. No streaming
+    * query runs. The firing lists `srcDir`'s top-level files (skipping
+    * `_`- and `.`-prefixed names and `._COPYING_` uploads, the file
+    * source's hidden-file rule), subtracts the names in the feed's file
+    * ledger under `checkpoint`, reads exactly the unseen files in one CSV
+    * scan and applies the same idempotent key-merge as the batch path, so
+    * overlapping rows across files dedup exactly like ON CONFLICT. A
+    * firing with no unseen files runs no Spark job.
     *
     * Scale contract — O(batch), not O(history): the sink is laid out as
-    * `sinkPath/<partitionCol>=<value>/` and each trigger merges ONLY the
-    * partitions whose values appear in the incoming batch. The existing
-    * side is read through a partition-pruned filter (Spark prunes the
-    * directory listing to the affected `date=` dirs), the merge shuffles
-    * O(batch + affected partitions) rows, and publication is a per-
-    * partition-directory rename swap — untouched partitions are never
-    * listed, read, or rewritten, so their files stay byte-identical
-    * across triggers. With ~daily partitions and a 15-minute cadence this
-    * turns each firing from a full-history rewrite into a constant-size
-    * job regardless of how much history has accumulated.
+    * `sinkPath/<partitionCol>=<value>/` and each firing merges ONLY the
+    * partitions whose values appear in its batch. The existing side is
+    * read with the feed's `schema` (no schema-inference job) through a
+    * partition-pruned filter, the merge shuffles O(batch + affected
+    * partitions) rows, and publication is a per-partition-directory
+    * rename swap ([[PartitionSwap]]) — untouched partitions are never
+    * read or rewritten, so their files stay byte-identical across firings.
+    * The batch is parsed once: it is persisted for the touched-values
+    * `collect` and the merge.
     *
-    * Crash safety, per partition: each affected `date=d` dir is swapped
-    * via rename(live → backup); rename(staging → live); delete(backup),
-    * with backups under `sinkPath + "__prev"` (OUTSIDE the sink so a
-    * half-finished swap can never pollute partition discovery). A crash
-    * between the renames leaves the data at the backup; the next trigger
-    * restores any backup whose live dir is missing before merging.
+    * Crash safety: `afterPublish` (e.g. [[graft.NytJob]]'s JDBC mirror)
+    * runs with the touched values after the publish, and only then is the
+    * ledger committed — a new numbered snapshot written aside and renamed
+    * into place, so a reader never sees a partial ledger. A crash or an
+    * `afterPublish` failure anywhere before the commit leaves the files
+    * out of the ledger; the next firing merges them again (the merge keeps
+    * stored rows, so no row changes) and reruns `afterPublish`. A crash
+    * inside a swap is healed by [[PartitionSwap.recover]] on the next
+    * firing. A checkpoint written by the earlier streaming-query version
+    * of this function is not read: the first firing on it merges every
+    * file of the drop dir once, which changes no row.
     *
     * `partitionCol` must be non-null in the source (true for the NYT
     * feeds' `date`; the reference's schema marks it NOT NULL,
     * /root/reference/src/main/resources/schema.sql).
     *
     * Returns the distinct partition values this firing merged, so
-    * downstream mirrors (e.g. [[graft.NytJob]]'s JDBC upsert) can stay
-    * O(batch) too by touching only those partitions.
+    * downstream mirrors can stay O(batch) too by touching only those
+    * partitions.
     */
   def ingestAvailableNow(spark: SparkSession, srcDir: String,
-                         schema: org.apache.spark.sql.types.StructType,
-                         keys: Seq[String], tiebreak: Seq[org.apache.spark.sql.Column],
+                         schema: StructType, keys: Seq[String], tiebreak: Seq[Column],
                          checkpoint: String, sinkPath: String,
-                         partitionCol: String = "date"): Seq[Any] = {
-    import org.apache.hadoop.fs.Path
-    val touchedAll = new scala.collection.mutable.LinkedHashSet[Any]
-    val q = spark.readStream
-      .schema(schema)
-      .option("header", "true")
-      .option("dateFormat", "yyyy-MM-dd")
-      // one micro-batch per firing: each batch pays one merge of its
-      // affected partitions, so collapsing the backlog into a single batch
-      // merges every affected partition exactly once per firing
-      .option("maxFilesPerTrigger", Int.MaxValue.toString)
-      .csv(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark2 = batch.sparkSession
-        val conf = spark2.sparkContext.hadoopConfiguration
-        val sink = new Path(sinkPath)
-        val fs = sink.getFileSystem(conf) // sinkPath's OWN filesystem
-        // heal any half-done swap a previous crash left behind
-        PartitionSwap.recover(fs, sink)
-        // the partitions this batch touches — O(#distinct dates in batch),
-        // a handful of values, NOT a scan of the sink
-        val touched = batch.select(col(partitionCol)).distinct().collect()
-          .map(_.get(0)).filter(_ != null)
-        touchedAll.synchronized { touchedAll ++= touched }
-        if (touched.nonEmpty) {
-          val hasData = fs.exists(sink) &&
-            fs.listStatus(sink).exists(_.getPath.getName.startsWith(partitionCol + "="))
-          // read ONLY the affected partitions: the isin filter on the
-          // partition column prunes the directory listing (PartitionFilters
-          // in the scan), so this reads O(affected partitions) files no
-          // matter how large the sink's history is. Absent/empty sink
-          // (first run) → empty frame; any OTHER read failure propagates
-          // rather than masquerading as empty and truncating a partition.
-          val existing =
-            if (hasData)
-              spark2.read.parquet(sinkPath)
-                .filter(col(partitionCol).isin(touched.toSeq: _*))
-            else spark2.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema)
-          val merged = Ingest.appendIdempotent(existing, batch, keys, tiebreak)
-          // write-then-swap (parquet can't overwrite its own input): the
-          // merged slice lands in a staging dir partitioned identically,
-          // then each produced partition dir is swapped into the sink
-          val staging = new Path(sinkPath + "__staging")
-          fs.delete(staging, true)
-          merged.write.mode("overwrite")
-            .partitionBy(partitionCol).parquet(staging.toString)
-          PartitionSwap.publish(fs, staging, sink, partitionCol)
-        }
-        ()
+                         partitionCol: String = "date",
+                         afterPublish: Seq[Any] => Unit = _ => ()): Seq[Any] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ledger = new Path(checkpoint, "ledger")
+    val ledgerFs = ledger.getFileSystem(conf)
+    val (version, seen) = FileLedger.read(ledgerFs, ledger)
+    val src = new Path(srcDir)
+    val unseen = src.getFileSystem(conf).listStatus(src).filter(_.isFile).map(_.getPath)
+      .filter(p => visible(p.getName) && !seen(p.getName))
+    val sink = new Path(sinkPath)
+    val fs = sink.getFileSystem(conf) // sinkPath's OWN filesystem
+    // heal any half-done swap a previous crash left behind
+    PartitionSwap.recover(fs, sink)
+    if (unseen.isEmpty) return Nil
+    val batch = Ingest.readCsv(spark, schema, unseen.map(_.toString).toSeq: _*).persist()
+    val touched = try {
+      // the partitions this batch touches — O(#distinct values in batch),
+      // a handful of values, NOT a scan of the sink
+      val touched = batch.select(col(partitionCol)).distinct().collect()
+        .map(_.get(0)).filter(_ != null).toSeq
+      if (touched.nonEmpty) {
+        // read ONLY the affected partitions: the isin filter on the
+        // partition column prunes the scan to the affected `date=` dirs.
+        // Absent sink (first run) → empty frame; any OTHER read failure
+        // propagates rather than masquerading as empty and truncating a
+        // partition.
+        val existing =
+          if (fs.exists(sink))
+            spark.read.schema(schema).parquet(sinkPath)
+              .filter(col(partitionCol).isin(touched: _*))
+          else spark.createDataFrame(new java.util.ArrayList[Row](), batch.schema)
+        val merged = Ingest.appendIdempotent(existing, batch, keys, tiebreak)
+        // write-then-swap (parquet can't overwrite its own input): the
+        // merged slice lands in a staging dir partitioned identically,
+        // then each produced partition dir is swapped into the sink
+        val staging = new Path(sinkPath + "__staging")
+        fs.delete(staging, true)
+        merged.write.mode("overwrite")
+          .partitionBy(partitionCol).parquet(staging.toString)
+        PartitionSwap.publish(fs, staging, sink, partitionCol)
+        afterPublish(touched)
       }
-      .start()
-    q.awaitTermination()
-    touchedAll.synchronized { touchedAll.toSeq }
+      touched
+    } finally batch.unpersist()
+    FileLedger.commit(ledgerFs, ledger, version + 1, seen ++ unseen.map(_.getName))
+    touched
+  }
+
+  /** The file source's hidden-file rule: committer/temp names (`_x`,
+    * `.x`) and in-flight `hadoop fs -put` copies are not feed files. */
+  private def visible(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".") && !name.endsWith("._COPYING_")
+
+  /** A feed's ingested file names, as numbered snapshots under one dir:
+    * the highest number is the ledger. [[commit]] writes the next number
+    * aside under a hidden name and renames it into place (a rename never
+    * overwrites), then drops older snapshots, so a reader sees the old or
+    * the new snapshot whole. */
+  private object FileLedger {
+    private def versions(fs: FileSystem, dir: Path): Seq[Long] =
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).map(_.getPath.getName)
+        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted.toSeq
+
+    def read(fs: FileSystem, dir: Path): (Long, Set[String]) =
+      versions(fs, dir).lastOption.fold((0L, Set.empty[String])) { v =>
+        val in = fs.open(new Path(dir, v.toString))
+        try (v, scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .filter(_.nonEmpty).toSet)
+        finally in.close()
+      }
+
+    def commit(fs: FileSystem, dir: Path, version: Long, names: Set[String]): Unit = {
+      val tmp = new Path(dir, s".$version.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(names.toSeq.sorted.map(_ + "\n").mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, new Path(dir, version.toString)))
+        sys.error(s"cannot commit ledger $tmp as version $version")
+      versions(fs, dir).filter(_ < version)
+        .foreach(v => fs.delete(new Path(dir, v.toString), false))
+    }
   }
 
   /** Stream-stream inner join (§2.9): views joined to the clicks that

@@ -1,7 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
@@ -136,5 +141,95 @@ class NytJobSpec extends AnyFunSuite {
         assert(t.filter(col("fips").isNull).count() == days.size, feed)
       }
     }
+  }
+
+  /** The NYT-shaped fixture of the revision test, one file per feed. */
+  private def dropDay(src: Path, name: String, day: String): Unit = {
+    Files.createDirectories(src.resolve("counties"))
+    Files.createDirectories(src.resolve("states"))
+    Files.writeString(src.resolve("counties").resolve(s"c$name.csv"),
+      ("date,county,state,fips,cases,deaths" +: ((1 to 5).map(i =>
+        s"$day,C$i,Washington,${53000 + i},${100 * i},$i") :+
+        s"$day,Unknown,Washington,,7,0")).mkString("\n") + "\n")
+    Files.writeString(src.resolve("states").resolve(s"s$name.csv"),
+      ("date,state,fips,cases,deaths" +: ((1 to 3).map(i =>
+        s"$day,State$i,$i,${1000 * i},${10 * i}") :+ s"$day,Guam,,3,0"))
+        .mkString("\n") + "\n")
+  }
+
+  /** Every file under `dir`: relative name → bytes. */
+  private def files(dir: Path): Map[String, Seq[Byte]] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  test("a mirror failure after the publish is mirrored by the next firing") {
+    val root = Files.createTempDirectory("graft-nyt-gap")
+    val src = root.resolve("src"); val sink = root.resolve("sink")
+    val ckpt = root.resolve("ckpt")
+    val url = s"jdbc:derby:${root.resolve("db")};create=true"
+    def fire(): Unit = NytJob.runOnce(spark, src.toString, sink.toString,
+      ckpt.toString, Some(url))
+    def mirror(t: String) = spark.read.jdbc(url, t, new java.util.Properties)
+    def sunk(feed: String) = spark.read.parquet(sink.resolve(feed).toString)
+    def sql(stmt: String): Unit = {
+      val c = java.sql.DriverManager.getConnection(url)
+      try c.createStatement().executeUpdate(stmt) finally c.close()
+    }
+
+    // a states table too narrow for the feed: the states mirror throws
+    // after the states sink has been published
+    sql("CREATE TABLE states (date DATE NOT NULL, state VARCHAR(4) NOT NULL, " +
+      "fips INTEGER, cases BIGINT, deaths BIGINT)")
+    dropDay(src, "1", "2020-03-15")
+    dropDay(src, "2", "2020-03-16")
+    intercept[Exception](fire())
+    val stored = sunk("states").collect().map(_.toString).sorted.toSeq
+    assert(perDate(sunk("states")).keySet == Set("2020-03-15", "2020-03-16"))
+    assert(mirror("states").count() == 0)
+
+    // no new files: the unrecorded states files merge again (no row
+    // changes) and their dates reach the mirror
+    sql("DROP TABLE states")
+    fire()
+    assert(sunk("states").collect().map(_.toString).sorted.toSeq == stored)
+    for (feed <- Seq("counties", "states")) {
+      val bySink = perDate(sunk(feed))
+      assert(bySink.keySet == Set("2020-03-15", "2020-03-16"), feed)
+      assert(perDate(mirror(feed)) == bySink, feed)
+    }
+  }
+
+  test("a firing with no new files runs no Spark job and changes no sink file") {
+    val root = Files.createTempDirectory("graft-nyt-idle")
+    val src = root.resolve("src"); val sink = root.resolve("sink")
+    val url = s"jdbc:derby:${root.resolve("db")};create=true"
+    def fire(): Unit = NytJob.runOnce(spark, src.toString, sink.toString,
+      root.resolve("ckpt").toString, Some(url))
+    dropDay(src, "1", "2020-03-15")
+    fire()
+    val before = files(sink)
+    assert(before.nonEmpty)
+
+    val sc = spark.sparkContext
+    val group = "nyt-job-spec-idle"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      ListenerBusDrain(sc)
+      sc.setJobGroup(group, "idle firing")
+      try fire() finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      assert(jobs.get == 0)
+    } finally sc.removeSparkListener(listener)
+    assert(files(sink) == before)
   }
 }

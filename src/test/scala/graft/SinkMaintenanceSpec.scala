@@ -79,119 +79,4 @@ class SinkMaintenanceSpec extends AnyFunSuite {
     run()
     assert(spark.read.parquet(sink).count() == 3)
   }
-
-  test("sort-on-write prunes parquet row groups under a range filter") {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    // the demonstration key is a BIGINT: int64 min/max statistics filter
-    // in every parquet reader path (timestamp_ntz columns carry stats
-    // too, but Spark declines to build the reader-side predicate for
-    // them — pushed-yet-undecoded, found the hard way)
-    val cut = 1500L // ~10% of the 0..14999 orderkey range
-    def scannedRows(path: String): Long = {
-      val df = spark.read.parquet(path).filter(col("l_orderkey") < cut)
-      df.queryExecution.executedPlan.execute().count()
-      df.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case s: FileSourceScanExec => s.metrics("numOutputRows").value
-      }.getOrElse(sys.error("no FileSourceScanExec in plan"))
-    }
-    val li = Tables.lineitem(spark, "/root/testdata/sf0.01")
-      .select("l_orderkey", "l_shipdate", "l_quantity")
-    val total = li.count()
-    val selected = li.filter(col("l_orderkey") < cut).count()
-    assert(selected < total / 4, "fixture drifted: cut no longer selective")
-    val sorted = java.nio.file.Files
-      .createTempDirectory("sorted-sink").toString + "/li"
-    val unsorted = java.nio.file.Files
-      .createTempDirectory("unsorted-sink").toString + "/li"
-    // small row groups so the 60k-row fixture produces several of them;
-    // the unsorted twin shuffles hash-random so every group straddles
-    // the full key range
-    ops.SinkMaintenance.writeSorted(li, Seq("l_orderkey"), sorted,
-      rowGroupBytes = 128L * 1024)
-    li.repartition(2).write.option("parquet.block.size", 128L * 1024)
-      .parquet(unsorted)
-    val prunedRows = scannedRows(sorted)
-    val fullRows = scannedRows(unsorted)
-    assert(prunedRows < total / 2,
-      s"sorted scan decoded $prunedRows of $total — row groups not pruned")
-    assert(prunedRows < fullRows,
-      s"sorted ($prunedRows) not better than unsorted ($fullRows)")
-    // both layouts agree on the answer
-    assert(spark.read.parquet(sorted).filter(col("l_orderkey") < cut)
-      .count() == spark.read.parquet(unsorted)
-      .filter(col("l_orderkey") < cut).count())
-  }
-
-  test("deleteKeyed removes victims, leaves other partitions byte-identical, reruns no-op") {
-    import spark.implicits._
-    val sink = Files.createTempDirectory("del-sink").toString + "/docs"
-    // 3 date partitions; d=2000-01-03 will be fully emptied
-    val rows = Seq(
-      (1L, "2000-01-01", "a"), (2L, "2000-01-01", "b"),
-      (3L, "2000-01-02", "c"), (4L, "2000-01-02", "d"),
-      (5L, "2000-01-03", "e"))
-      .toDF("doc_id", "date", "payload")
-    rows.write.partitionBy("date").parquet(sink)
-    val before = snapshot(JPath.of(sink, "date=2000-01-02"))
-    // delete doc 1 (partial partition) and doc 5 (entire partition);
-    // doc 99 matches nothing
-    val victims = Seq(1L, 5L, 99L).toDF("doc_id")
-    // partition discovery infers date-shaped values as DATE — compare
-    // their string forms
-    val affected = ops.SinkMaintenance
-      .deleteKeyed(spark, sink, "doc_id", victims, "date")
-      .map(_.toString).toSet
-    assert(affected == Set("2000-01-01", "2000-01-03"))
-    val left = spark.read.parquet(sink).select("doc_id")
-      .as[Long].collect().sorted
-    assert(left.sameElements(Array(2L, 3L, 4L)))
-    // fully-emptied partition dir is gone (victims must not survive)
-    assert(!Files.exists(JPath.of(sink, "date=2000-01-03")))
-    // untouched partition not rewritten
-    assert(snapshot(JPath.of(sink, "date=2000-01-02")) == before)
-    // idempotent rerun: nothing affected, data unchanged
-    assert(ops.SinkMaintenance
-      .deleteKeyed(spark, sink, "doc_id", victims, "date").isEmpty)
-    assert(spark.read.parquet(sink).count() == 3)
-  }
-
-  test("z-ordered layout prunes two-column predicates better than one-column sort") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.functions.{datediff, lit, min => fmin, to_date}
-    val o0 = Tables.orders(spark, "/root/testdata/sf0.01")
-      .select(col("o_custkey").as("x"),
-        datediff(col("o_orderdate").cast("date"),
-          to_date(lit("1970-01-01"))).cast("long").as("day"),
-        col("o_totalprice"))
-    // normalize the day axis to 0.. so it fits the 12-bit z grid
-    val day0 = o0.agg(fmin(col("day"))).head().getLong(0)
-    val o = o0.withColumn("y", col("day") - day0).drop("day")
-    val zDir = Files.createTempDirectory("z-sink").toString + "/o"
-    val xDir = Files.createTempDirectory("x-sink").toString + "/o"
-    ops.SinkMaintenance.writeZOrdered(o, "x", "y", zDir,
-      rowGroupBytes = 32L * 1024)
-    ops.SinkMaintenance.writeSorted(o, Seq("x"), xDir,
-      rowGroupBytes = 32L * 1024)
-    // predicate selective on BOTH dimensions: half the custkey range,
-    // a tenth of the day range
-    def scanned(path: String): Long = {
-      val df = spark.read.parquet(path)
-        .filter(col("x") < 750L && col("y") < 250L)
-      df.queryExecution.executedPlan.execute().count()
-      df.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case s: FileSourceScanExec => s.metrics("numOutputRows").value
-      }.getOrElse(sys.error("no FileSourceScanExec in plan"))
-    }
-    val (zScan, xScan) = (scanned(zDir), scanned(xDir))
-    val total = o.count()
-    // the x-sorted layout can only prune the x half; z bounds BOTH axes
-    assert(zScan < xScan,
-      s"z-ordered ($zScan) not better than x-sorted ($xScan) of $total")
-    assert(zScan < total / 4, s"z-ordered scan decoded $zScan of $total")
-    // layouts agree on the answer
-    assert(spark.read.parquet(zDir).filter(col("x") < 750L && col("y") < 250L)
-      .count() == spark.read.parquet(xDir)
-      .filter(col("x") < 750L && col("y") < 250L).count())
-  }
 }

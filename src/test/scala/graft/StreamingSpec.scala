@@ -205,6 +205,35 @@ class StreamingSpec extends AnyFunSuite {
       .count() == 1) // existing row won
   }
 
+  test("ingest skips _- and .-prefixed drop files until they are renamed visible") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.col
+    val src = Files.createTempDirectory("graft-hidden-src")
+    val checkpoint = Files.createTempDirectory("graft-hidden-ckpt").toString
+    val sink = Files.createTempDirectory("graft-hidden-sink")
+      .resolve("states").toString
+    def drop(name: String, line: String): Unit =
+      Files.writeString(src.resolve(name),
+        s"date,state,fips,cases,deaths\n$line\n")
+    def run(): Seq[Any] = ops.Streaming.ingestAvailableNow(spark, src.toString,
+      ops.Ingest.statesSchema, ops.Ingest.statesKey, Seq(col("cases").asc),
+      checkpoint, sink)
+    def states(): Set[String] = spark.read.parquet(sink).select("state")
+      .collect().map(_.getString(0)).toSet
+
+    drop("day1.csv", "2020-03-15,Washington,53,904,48")
+    drop("_partial.csv", "2020-03-16,Oregon,41,30,1")
+    drop(".x.csv", "2020-03-17,Idaho,16,5,0")
+    assert(run().map(_.toString) == Seq("2020-03-15"))
+    assert(states() == Set("Washington"))
+    assert(run().isEmpty) // hidden files stay out on a rerun too
+
+    Files.move(src.resolve("_partial.csv"), src.resolve("partial.csv"))
+    assert(run().map(_.toString) == Seq("2020-03-16"))
+    assert(states() == Set("Washington", "Oregon"))
+    assert(run().isEmpty)
+  }
+
   test("stream-stream view/click join matches the batch join") {
     val views = MemoryStream[Ev]
     val clicks = MemoryStream[Ev]
