@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import ops.{Ingest, JdbcSink, Streaming}
+import ops.{Ingest, JdbcSink}
 
 /** The end-to-end NYT job (SURVEY.md §2.11 O1) — one command that runs the
   * reference's ENTIRE pipeline with bug-fixed semantics: the two-feed
@@ -22,10 +22,10 @@ import ops.{Ingest, JdbcSink, Streaming}
   * reference re-downloads and re-inserts the full feed every firing, we
   * ingest each file once).
   *
-  * Each firing is one plain Spark batch per feed with new files and no
-  * streaming query: the ledger skips seen files, and the sink merge
+  * Each firing is one plain Spark batch per feed with new files: the
+  * ledger skips seen files, and the sink merge
   * rewrites only the date partitions present in the new batch
-  * (Streaming.ingestAvailableNow) — at years of history and a 15-minute
+  * ([[ops.Ingest.ingestNewFiles]]) — at years of history and a 15-minute
   * cadence the job stays constant-size, and a firing with no new files
   * runs no Spark job. A checkpoint dir written by the earlier
   * streaming-query version holds no ledger, so the first firing on it
@@ -82,7 +82,7 @@ object NytJob {
               checkpointRoot: String, jdbcUrl: Option[String] = None): Unit =
     feeds.foreach { f =>
       val sink = s"$sinkRoot/${f.name}"
-      Streaming.ingestAvailableNow(spark,
+      Ingest.ingestNewFiles(spark,
         srcDir = s"$srcRoot/${f.name}",
         schema = f.schema, keys = f.keys, tiebreak = tiebreak,
         checkpoint = s"$checkpointRoot/${f.name}",

@@ -43,10 +43,9 @@ import ops.{CurationOps, PartitionSwap, SimOps}
   * Incremental ingest ([[update]]): chunk the new batch, canonicalize
   * within it, LEFT-ANTI probe the index's md5 ledger, and append only
   * novel chunks bucketed under the MANIFEST's pinned planes — O(batch)
-  * writes per firing, the [[ops.DedupOps.incrementalDedup]] store
-  * contract with the index itself as the ledger. Because the ledger and
-  * the serve artifact are ONE file set written by ONE job commit,
-  * a crashed firing leaves no partial state and a rerun appends zero
+  * writes per firing, with the index itself as the ledger. Because the
+  * ledger and the serve artifact are ONE file set written by ONE job
+  * commit, a crashed firing leaves no partial state and a rerun appends zero
   * rows (idempotent). Appended file sets are bucket-sorted internally;
   * [[compact]] merges them back into the single global bucket-sorted
   * layout when append debt accumulates (each appended set adds files

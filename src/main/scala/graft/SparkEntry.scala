@@ -34,7 +34,7 @@ object SparkEntry {
     * BOUNDED (domain-/calendar-/eval-sized) except the documented
     * self-join feature tables. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++ ops.Ingest.queries ++ ops.Streaming.queries ++
+    ops.Relational.queries ++ ops.Ingest.queries ++ ops.Windows.queries ++
       ops.TextOps.queries ++ ops.DedupOps.queries ++ ops.SimOps.queries ++
       ops.Multimodal.queries ++ ops.ExtOps.queries ++ ops.Skew.queries ++
       ops.SqlOps.queries ++ ops.StatsOps.queries ++ ops.Pipeline.queries ++
@@ -44,7 +44,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    ops.Relational.oracles ++ ops.Ingest.oracles ++ ops.Streaming.oracles ++
+    ops.Relational.oracles ++ ops.Ingest.oracles ++ ops.Windows.oracles ++
       ops.TextOps.oracles ++ ops.DedupOps.oracles ++ ops.SimOps.oracles ++
       ops.Multimodal.oracles ++ ops.ExtOps.oracles ++ ops.Skew.oracles ++
       ops.SqlOps.oracles ++ ops.StatsOps.oracles ++ ops.Pipeline.oracles ++

@@ -768,9 +768,9 @@ object CurationOps {
   /** The q101 acceptance gate as a reusable row-local predicate (needs
     * `doc_id` and `n_chars` columns; caller registers Hash60). Because it
     * is a pure row property — no state, no shuffle, no corpus statistics
-    * — the SAME expression gates a batch scan and a structured stream
-    * identically (StreamingSpec pins that parity): curation gates built
-    * this way backfill and stream from one code path. */
+    * — the SAME expression gates any slicing of the input identically
+    * (CurationOpsSpec's q101 recount pins membership row by row), so a
+    * backfill and each later batch share one code path. */
   private[graft] def importanceGate: Column =
     expr("h60(concat('iw:', cast(doc_id as string))) % 512") <
       least(col("n_chars"), lit(512L))

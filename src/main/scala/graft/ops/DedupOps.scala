@@ -117,60 +117,6 @@ object DedupOps {
       COUNT(*) AS n_copies
     FROM documents GROUP BY md5(text) ORDER BY doc_id"""
 
-  /** Incremental exact dedup against a persisted fingerprint store — the
-    * O(batch) form of q29 for a standing ingest (the reference's
-    * every-15-min rerun, `deploy/deploy.sh:29`, generalized to content
-    * identity): dedup the incoming batch WITHIN itself (keep min doc_id
-    * per content hash), anti-join it against the fingerprints of
-    * everything ever accepted, append only the novel fingerprints, and
-    * return the novel docs. Per firing this reads the store but never
-    * rewrites it — appends are new parquet files committed atomically by
-    * Spark's output committer, and re-running the same batch appends
-    * nothing (its hashes are already present), so the store never
-    * accumulates duplicates.
-    *
-    * Scale: both sides shuffle on content_md5 — uniformly distributed by
-    * construction, no skew. At 100 TB the store side dominates; since it
-    * is append-only and keyed by the join column, bucketing it by
-    * content_md5 (or relying on DPP over a hash-prefix partition column)
-    * removes the store's shuffle entirely — the batch side is the small
-    * one and shuffles O(batch) regardless.
-    *
-    * The returned frame is pinned via eager localCheckpoint BEFORE the
-    * store append: persist() alone is not enough — appending to storeDir
-    * triggers CacheManager.recacheByPath on every cached plan that reads
-    * that path, which would re-execute the anti-join against the
-    * now-grown store and return empty. Checkpointing truncates the plan
-    * so the result no longer references the path at all. Unpersist via
-    * the returned frame when done. */
-  def incrementalDedup(batch: DataFrame, storeDir: String): DataFrame = {
-    val s = batch.sparkSession
-    val hashed = batch.withColumn("content_md5", md5(col("text")))
-    val inBatch = hashed
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("content_md5")).orderBy(col("doc_id"))))
-      .filter(col("rn") === 1).drop("rn")
-    val novel =
-      if (storeExists(s, storeDir))
-        inBatch.join(s.read.parquet(storeDir), Seq("content_md5"),
-          "left_anti")
-      else inBatch
-    val pinned = novel.localCheckpoint(true)
-    pinned.select(col("content_md5"))
-      .write.mode("append").parquet(storeDir)
-    pinned
-  }
-
-  /** Store existence through the SAME filesystem abstraction the
-    * read/write path uses — `java.io.File` silently answers false for
-    * hdfs://, s3a://, etc., which would skip the anti-join and admit
-    * every duplicate as novel on a cluster store. */
-  private def storeExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** MinHash OR-band count — the RECALL knob, not a bucket-occupancy
     * knob: candidates are pairs sharing any of the B per-seed minima, so
     * recall at Jaccard j is 1-(1-j)^B (0.996 at j=0.5, B=8) and more
@@ -233,7 +179,7 @@ object DedupOps {
   // version) via the unified [[StageCache]] (mtime-keyed, so a
   // regenerated fixture under the same path can never serve stale
   // candidates). At cluster scale the same stage would be a temp
-  // parquet/Delta table (the incrementalDedup store pattern); in-session
+  // parquet/Delta table; in-session
   // block pinning is the single-app equivalent. Candidate rows are 5
   // longs each and bounded by band-bucket occupancy, so the pinned
   // footprint is tiny relative to the corpus.
@@ -1059,90 +1005,6 @@ $sqlJac,
       a.cluster_size, a.cluster_tokens
     FROM best b JOIN agg a USING (canon_id)
     WHERE b.rk = 1 ORDER BY b.canon_id"""
-
-  /** Verified-near-dup predicate over two 60-bit shingle-hash arrays:
-    * j >= 0.5 ⟺ 3·|A∩B| >= |A|+|B|, single array_intersect (q31 note). */
-  private def jaccardPass: Column =
-    size(array_intersect(col("hv1"), col("hv2"))) * 3 >=
-      size(col("hv1")) + size(col("hv2"))
-
-  /** Incremental MinHash near-dup against a persisted signature store —
-    * [[incrementalDedup]]'s contract extended from exact content identity
-    * to q31's verified near-dup semantics, for a standing ingest where
-    * each firing must reject paraphrases of anything EVER accepted
-    * without rescanning the corpus.
-    *
-    * Store layout under `storeDir`: `bands/` (doc_id, k, mhv — the 8
-    * per-seed minima, the blocking key) and `features/` (doc_id, hv —
-    * the shingle hash set, the verification payload). Per firing:
-    * within-batch near-dups drop first (band self-join + Jaccard >= 0.5,
-    * drop any doc pairing with a smaller id — the same pairwise-local
-    * keep rule as q108, no transitive closure); survivors block against
-    * the stored bands on (k, mhv), verify against the stored hv, and
-    * only the still-novel docs append their bands + features. Rerunning
-    * a firing is a no-op: every doc self-matches at j = 1.0.
-    *
-    * Scale: the batch side is O(batch) everywhere; the store side
-    * shuffles on the band key unless the store is bucketed by (k, mhv)
-    * — the same posture as incrementalDedup's content_md5 store, with
-    * ~8 rows per accepted doc. Docs too short to shingle (< 3 tokens)
-    * have no near-dup basis: they pass through every firing unstored —
-    * route them through incrementalDedup for exact identity instead.
-    * The returned frame is pinned via eager localCheckpoint BEFORE the
-    * store appends (the CacheManager.recacheByPath lesson, see
-    * [[incrementalDedup]]). */
-  def incrementalNearDup(batch: DataFrame, storeDir: String): DataFrame = {
-    val s = batch.sparkSession
-    val bandsDir = s"$storeDir/bands"
-    val featDir = s"$storeDir/features"
-    val feat = withShingles(batch)
-      .select(col("doc_id"), col("hv"), array(
-        (0 until MinhashBands).map(k =>
-          struct(lit(k).as("k"), minhashCol(k).as("mhv"))): _*).as("bands"))
-      .persist()
-    def bandRows(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), explode_outer(col("bands")).as("b"))
-        .select(col("doc_id"), col("b.k").as("k"), col("b.mhv").as("mhv"))
-    val br = bandRows(feat)
-    val wCand = br.select(col("doc_id").as("id1"), col("k"), col("mhv"))
-      .join(br.select(col("doc_id").as("id2"), col("k"), col("mhv")),
-        Seq("k", "mhv"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    val withinDrop = wCand
-      .join(feat.select(col("doc_id").as("id1"), col("hv").as("hv1")), "id1")
-      .join(feat.select(col("doc_id").as("id2"), col("hv").as("hv2")), "id2")
-      .filter(jaccardPass)
-      .select(col("id2").as("doc_id")).distinct()
-    val alive = feat.join(withinDrop, Seq("doc_id"), "left_anti")
-    val crossDrop =
-      if (storeExists(s, bandsDir)) {
-        val sb = s.read.parquet(bandsDir)
-          .select(col("doc_id").as("s_id"), col("k"), col("mhv"))
-        val sf = s.read.parquet(featDir)
-          .select(col("doc_id").as("s_id"), col("hv").as("hv2"))
-        bandRows(alive).join(sb, Seq("k", "mhv"))
-          .select(col("doc_id"), col("s_id")).distinct()
-          .join(alive.select(col("doc_id"), col("hv").as("hv1")), "doc_id")
-          .join(sf, "s_id")
-          .filter(jaccardPass)
-          .select(col("doc_id")).distinct()
-      } else feat.select(col("doc_id")).limit(0)
-    val novelFeat = alive.join(crossDrop, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val novel = batch
-      .join(withinDrop.union(crossDrop), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    feat.unpersist()
-    // `features/` writes BEFORE `bands/`: the candidate verify join is
-    // band→feature inner, so an orphan FEATURE row (crash between the two
-    // appends) is unreachable dead data, while an orphan BAND row would
-    // silently drop every candidate it blocks in later firings.
-    novelFeat.select(col("doc_id"), col("hv"))
-      .write.mode("append").parquet(featDir)
-    bandRows(novelFeat).write.mode("append").parquet(bandsDir)
-    novel
-  }
 
   // ---- q110: inter-source corpus overlap (MinHash sketch Jaccard) ------
   // The mixing-decision input a pipeline computes before q75/q86: HOW

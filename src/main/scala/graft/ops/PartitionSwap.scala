@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Crash-safe publication of partition directories by rename swap — shared
-  * by the incremental ingest merge ([[Streaming.ingestAvailableNow]]) and
+  * by the incremental ingest merge ([[Ingest.ingestNewFiles]]) and
   * sink compaction ([[SinkMaintenance.compactPartitions]]).
   *
   * Protocol per partition dir `p`: rename(live/p → prevRoot/p);

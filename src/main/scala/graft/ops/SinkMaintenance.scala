@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Sink maintenance for the incremental pipeline (SURVEY.md §4.4).
   *
-  * Every [[Streaming.ingestAvailableNow]] firing rewrites its affected
+  * Every [[Ingest.ingestNewFiles]] firing rewrites its affected
   * partitions with one file per shuffle task, so a partition touched by
   * many firings (or merged at high parallelism) fragments into many small
   * files — and at 100 TB, small files are a scan-planning and NameNode/

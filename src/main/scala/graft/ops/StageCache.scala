@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * candidates; the stale entry is unpersisted and evicted on the first
   * access under the new version. At cluster scale the version is a
   * catalog snapshot/table version and the boundary a temp parquet/Delta
-  * table (the `DedupOps.incrementalDedup` store pattern); in-session
+  * table; in-session
   * block pinning plus mtime versioning is the single-app equivalent.
   * Only SMALL derived tables belong here — candidate/edge/score tables
   * bounded well below the corpus — never a corpus-sized intermediate.

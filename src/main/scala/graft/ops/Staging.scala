@@ -16,10 +16,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * parallel scan. So S2 becomes a STAGING step: fetch each URL to a local
   * (or DFS) drop directory ATOMICALLY (write to a dot-prefixed temp file,
   * then rename — file sources ignore dotfiles, so a half-written download
-  * is never picked up), then let the normal file source / file-stream
-  * source scan it. Combined with [[Streaming.ingestAvailableNow]]'s
-  * checkpoint this reproduces the reference's cron loop: fetch feeds,
-  * ingest whatever is new.
+  * is never picked up), then let the normal file source scan it.
+  * Combined with [[Ingest.ingestNewFiles]]'s file ledger this reproduces
+  * the reference's cron loop: fetch feeds, ingest whatever is new.
   *
   * The HTTP transport is injectable (`fetch`), defaulting to the JDK
   * HttpClient; tests run against an in-memory fetcher (this sandbox has

@@ -244,79 +244,6 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("incremental dedup accepts only novel content across firings") {
-    import spark.implicits._
-    val store = java.nio.file.Files
-      .createTempDirectory("fp-store").toString + "/fp"
-    // firing 1: an internal duplicate (1,2 same text) collapses to min id
-    val b1 = Seq((1L, "alpha beta"), (2L, "alpha beta"), (3L, "gamma"))
-      .toDF("doc_id", "text")
-    val n1 = ops.DedupOps.incrementalDedup(b1, store)
-    assert(n1.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
-    n1.unpersist()
-    // firing 2: one seen text (under a NEW id), one novel
-    val b2 = Seq((10L, "alpha beta"), (11L, "delta")).toDF("doc_id", "text")
-    val n2 = ops.DedupOps.incrementalDedup(b2, store)
-    assert(n2.select("doc_id").as[Long].collect().toSeq == Seq(11L))
-    n2.unpersist()
-    // replaying firing 2 is a no-op (idempotent rerun, the reference's
-    // cron-rerun semantics) and the store holds each fingerprint once
-    val n3 = ops.DedupOps.incrementalDedup(b2, store)
-    assert(n3.count() == 0)
-    n3.unpersist()
-    val fp = spark.read.parquet(store)
-    assert(fp.count() == 3 && fp.distinct().count() == 3)
-  }
-
-  test("incremental near-dup rejects paraphrases of anything ever accepted") {
-    import spark.implicits._
-    val store = java.nio.file.Files
-      .createTempDirectory("nd-store").toString + "/nd"
-    val base = "alpha bravo charlie delta echo foxtrot golf hotel india" +
-      " juliet kilo lima mike november oscar papa quebec romeo sierra tango"
-    val other = "zero one two three four five six seven eight nine ten" +
-      " eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen"
-    // firing 1: two dissimilar docs, both novel
-    val n1 = ops.DedupOps.incrementalNearDup(
-      Seq((1L, base), (2L, other)).toDF("doc_id", "text"), store)
-    assert(n1.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    n1.unpersist()
-    // firing 2: a one-word paraphrase of doc 1 (never byte-identical, so
-    // exact dedup would admit it), one genuinely new doc, and a 2-token
-    // doc that has no shingle basis (passes through unstored)
-    val para = base.replace("kilo", "KILO9")
-    val fresh = "red orange yellow green blue indigo violet crimson amber" +
-      " teal navy maroon olive silver gold bronze copper pearl jade onyx"
-    val n2 = ops.DedupOps.incrementalNearDup(
-      Seq((10L, para), (11L, fresh), (12L, "too short"))
-        .toDF("doc_id", "text"), store)
-    assert(n2.select("doc_id").as[Long].collect().sorted.toSeq ==
-      Seq(11L, 12L))
-    n2.unpersist()
-    // replaying firing 2: 11 self-matches in the store; 12 still has no
-    // features so it passes through again — the documented contract
-    val n3 = ops.DedupOps.incrementalNearDup(
-      Seq((10L, para), (11L, fresh), (12L, "too short"))
-        .toDF("doc_id", "text"), store)
-    assert(n3.select("doc_id").as[Long].collect().toSeq == Seq(12L))
-    n3.unpersist()
-    // firing 3: two near-dups of each other (not of the store) keep min
-    val pair = "uno dos tres cuatro cinco seis siete ocho nueve diez once" +
-      " doce trece catorce quince dieciseis diecisiete dieciocho"
-    val n4 = ops.DedupOps.incrementalNearDup(
-      Seq((20L, pair), (21L, pair.replace("nueve", "NUEVE9")))
-        .toDF("doc_id", "text"), store)
-    assert(n4.select("doc_id").as[Long].collect().toSeq == Seq(20L))
-    n4.unpersist()
-    // store bookkeeping: one feature row and 8 band rows per accepted doc
-    val acc = Seq(1L, 2L, 11L, 20L)
-    val f = spark.read.parquet(s"$store/features")
-    assert(f.select("doc_id").as[Long].collect().sorted.toSeq == acc)
-    val b = spark.read.parquet(s"$store/bands")
-    assert(b.count() == acc.size * 8 &&
-      b.select("doc_id").distinct().as[Long].collect().sorted.toSeq == acc)
-  }
-
   test("q60 groups cover exactly the docs in q31 pairs; canonical is the min") {
     val g = DedupOps.q60DedupGroups(spark, sf)
     val rows = g.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

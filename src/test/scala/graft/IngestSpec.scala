@@ -1,9 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Date
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import ops.Ingest
@@ -23,6 +24,15 @@ class IngestSpec extends AnyFunSuite {
     f.toString
   }
 
+  private def readCounties(path: String) =
+    Ingest.readCsv(spark, Ingest.countiesSchema, path)
+
+  /** One firing of the states feed over the drop dir holding `csv`. */
+  private def fireStates(csv: String, sink: String): Seq[Any] =
+    Ingest.ingestNewFiles(spark, Paths.get(csv).getParent.toString,
+      Ingest.statesSchema, Ingest.statesKey, Seq(col("cases").asc),
+      Files.createTempDirectory("graft-ckpt").toString, sink)
+
   // FIXTURES.md §A us-counties.csv: dup keys, blank fips, month-boundary
   // dates, out-of-order dates.
   private lazy val countiesCsv = writeFixture("us-counties.csv",
@@ -35,7 +45,7 @@ class IngestSpec extends AnyFunSuite {
     "2020-01-01,Snohomish,Washington,53061,1,0")        // out-of-order date
 
   test("CSV scan: correct dates, blank fips becomes true null") {
-    val df = Ingest.readCounties(spark, countiesCsv)
+    val df = readCounties(countiesCsv)
     assert(df.count() == 6)
     // month-boundary regression vs reference Calendar.MONTH bug (§1.6.1):
     val dec = df.filter(col("cases") === 9999).select("date").head().getDate(0)
@@ -48,7 +58,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("key-dedup is deterministic first-writer-wins incl. null keys") {
-    val df = Ingest.readCounties(spark, countiesCsv)
+    val df = readCounties(countiesCsv)
     val deduped = Ingest.dedupKeepFirst(df, Ingest.countiesKey,
       Seq(col("cases").asc))
     assert(deduped.count() == 4) // 6 rows, 2 conflict losers dropped
@@ -64,15 +74,15 @@ class IngestSpec extends AnyFunSuite {
 
   test("re-ingest is idempotent; new keys append (§3.3 rerun semantics)") {
     val base = Ingest.dedupKeepFirst(
-      Ingest.readCounties(spark, countiesCsv),
+      readCounties(countiesCsv),
       Ingest.countiesKey, Seq(col("cases").asc))
     // rerun with the same batch → no change
     val rerun = Ingest.appendIdempotent(base,
-      Ingest.readCounties(spark, countiesCsv),
+      readCounties(countiesCsv),
       Ingest.countiesKey, Seq(col("cases").asc))
     assert(rerun.count() == base.count())
     // existing row wins over a conflicting new value (DO NOTHING)
-    val conflicting = Ingest.readCounties(spark, writeFixture("delta.csv",
+    val conflicting = readCounties(writeFixture("delta.csv",
       "date,county,state,fips,cases,deaths",
       "2020-03-15,Snohomish,Washington,53061,777777,9",  // existing key
       "2021-06-01,King,Washington,53033,42,1"))          // new key
@@ -92,19 +102,19 @@ class IngestSpec extends AnyFunSuite {
       "2020-03-16,Washington,53,950,49",
       "2020-03-16,Oregon,41,100,2")
     val sink = Files.createTempDirectory("graft-part").resolve("states").toString
-    Ingest.ingest(spark, csv, Ingest.statesSchema, Ingest.statesKey,
-      Seq(col("cases").asc), sink, partitionCols = Seq("date"))
+    fireStates(csv, sink)
     // physical layout is .../date=yyyy-MM-dd/
     val dirs = new java.io.File(sink).listFiles().map(_.getName)
       .filter(_.startsWith("date=")).sorted
     assert(dirs.sameElements(Array("date=2020-03-15", "date=2020-03-16")))
-    // a date predicate prunes to one partition directory
-    val pruned = spark.read.parquet(sink)
-      .filter(col("date") === Date.valueOf("2020-03-16"))
+    // NytJob's mirror slice read (the feed's schema, filtered to the
+    // touched dates) prunes to those partition directories
+    val pruned = spark.read.schema(Ingest.statesSchema).parquet(sink)
+      .filter(col("date").isin(Date.valueOf("2020-03-16")))
     assert(pruned.count() == 2)
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") || pruned.inputFiles
-      .forall(_.contains("date=2020-03-16")))
+    val pf = pruned.queryExecution.executedPlan.toString.linesIterator
+      .filter(_.contains("PartitionFilters:")).mkString("\n")
+    assert(pf.contains("date") && !pf.contains("PartitionFilters: []"), pf)
   }
 
   test("malformed rows degrade to nulls, not crashes (vs reference parseInt)") {
@@ -115,7 +125,7 @@ class IngestSpec extends AnyFunSuite {
       "2020-03-15,Snohomish,Washington,53061,175,4",
       "not-a-date,King,Washington,53033,NaNN,xx",
       "2020-03-16,Pierce,Washington,53053,,")
-    val df = Ingest.readCounties(spark, csv)
+    val df = readCounties(csv)
     assert(df.count() == 3)
     assert(df.filter(col("county") === "King")
       .head().isNullAt(df.schema.fieldIndex("cases")))
@@ -150,29 +160,33 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("widening schema evolution: mergeSchema and explicit-schema reads agree") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evolve").resolve("sink").toString
-    // v1 batch: two columns; v2 batch adds a quality column
-    Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-      .write.parquet(s"$dir/batch=1")
-    Seq((3L, "gamma", 0.9), (4L, "delta", 0.5))
-      .toDF("doc_id", "text", "quality").write.parquet(s"$dir/batch=2")
-    val merged = Ingest.readEvolved(spark, dir)
-    assert(merged.schema.fieldNames.toSet ==
-      Set("doc_id", "text", "quality", "batch"))
+    // a feed that gains a column: firing 1 lands 03-15 under the states
+    // schema, firing 2 lands 03-16 under the widened one
+    val wide = Ingest.statesSchema.add("hospitalized", LongType)
+    val src = Files.createTempDirectory("graft-evolve-src")
+    val ckpt = Files.createTempDirectory("graft-evolve-ckpt").toString
+    val sink = Files.createTempDirectory("graft-evolve").resolve("states").toString
+    def fire(schema: StructType, name: String, lines: String*): Unit = {
+      Files.writeString(src.resolve(name), lines.mkString("\n") + "\n")
+      Ingest.ingestNewFiles(spark, src.toString, schema, Ingest.statesKey,
+        Seq(col("cases").asc), ckpt, sink)
+    }
+    fire(Ingest.statesSchema, "v1.csv", "date,state,fips,cases,deaths",
+      "2020-03-15,Washington,53,904,48", "2020-03-15,Oregon,41,30,1")
+    fire(wide, "v2.csv", "date,state,fips,cases,deaths,hospitalized",
+      "2020-03-16,Washington,53,950,49,7", "2020-03-16,Oregon,41,35,1,2")
+    val merged = spark.read.option("mergeSchema", "true").parquet(sink)
+    assert(merged.schema.fieldNames.toSet == wide.fieldNames.toSet)
     assert(merged.count() == 4)
     // v1 rows null-backfill the added column; v2 rows keep their values
-    assert(merged.filter(col("quality").isNull).count() == 2)
-    assert(merged.filter(col("batch") === 1 && col("quality").isNotNull)
-      .count() == 0)
-    // the 100 TB path — explicit declared schema, no footer union — returns
-    // the same rows
-    val declared = Ingest.readEvolved(spark, dir,
-        Some(merged.drop("batch").schema))
-      .drop("batch") // partition col appends even under an explicit schema
-    assert(declared.count() == 4)
-    assert(declared.filter(col("quality").isNull).count() == 2)
-    val m = merged.drop("batch")
+    assert(merged.filter(col("hospitalized").isNull).count() == 2)
+    assert(merged.filter(col("date") === Date.valueOf("2020-03-15")
+      && col("hospitalized").isNotNull).count() == 0)
+    // the 100 TB path — the declared schema, no footer union, as the
+    // firing reads its sink — returns the same rows
+    val declared = spark.read.schema(wide).parquet(sink)
+      .select(wide.fieldNames.map(col).toSeq: _*)
+    val m = merged.select(wide.fieldNames.map(col).toSeq: _*)
     assert(m.exceptAll(declared).count() == 0 &&
       declared.exceptAll(m).count() == 0)
   }
@@ -184,8 +198,7 @@ class IngestSpec extends AnyFunSuite {
       "2020-03-15,Guam,,3,0",
       "2020-03-15,Washington,53,999,50")
     val sink = Files.createTempDirectory("graft-sink").resolve("states").toString
-    Ingest.ingest(spark, statesCsv, Ingest.statesSchema, Ingest.statesKey,
-      Seq(col("cases").asc), sink)
+    fireStates(statesCsv, sink)
     val back = spark.read.parquet(sink)
     assert(back.count() == 2)
     assert(back.schema("fips").nullable)
@@ -352,5 +365,220 @@ class IngestSpec extends AnyFunSuite {
     assert(tp.getAs[Long]("top_share_ppm") == 600000L)
     assert(r("o_orderdate").getAs[String]("min_v") == "2024-06-01")
     spark.catalog.clearCache()
+  }
+
+  test("checkpointed AvailableNow ingest is incremental and idempotent across reruns") {
+    val src = Files.createTempDirectory("graft-stream-src")
+    val checkpoint = Files.createTempDirectory("graft-stream-ckpt").toString
+    val sink = Files.createTempDirectory("graft-stream-sink")
+      .resolve("states").toString
+    def drop(name: String, lines: String*): Unit =
+      Files.writeString(src.resolve(name), lines.mkString("\n") + "\n")
+    def run(): Unit = Ingest.ingestNewFiles(spark, src.toString,
+      Ingest.statesSchema, Ingest.statesKey,
+      Seq(col("cases").asc),
+      checkpoint, sink)
+
+    drop("batch1.csv",
+      "date,state,fips,cases,deaths",
+      "2020-03-15,Washington,53,904,48",
+      "2020-03-15,Guam,,3,0")
+    run() // cron firing 1
+    assert(spark.read.parquet(sink).count() == 2)
+
+    // firing 2: one overlapping key (conflict → existing row wins), one new
+    drop("batch2.csv",
+      "date,state,fips,cases,deaths",
+      "2020-03-15,Washington,53,999,50",
+      "2020-03-16,Washington,53,1000,52")
+    run()
+    val after = spark.read.parquet(sink)
+    assert(after.count() == 3)
+    assert(after.filter(col("cases") === 904)
+      .count() == 1) // existing row won the conflict
+    // firing 3 with nothing new: checkpoint skips seen files, sink unchanged
+    run()
+    assert(spark.read.parquet(sink).count() == 3)
+  }
+
+  test("incremental merge touches only the batch's partitions (O(batch), not O(history))") {
+    import java.nio.file.{Path => JPath}
+    import scala.jdk.CollectionConverters._
+    val src = Files.createTempDirectory("graft-part-src")
+    val checkpoint = Files.createTempDirectory("graft-part-ckpt").toString
+    val sinkRoot = Files.createTempDirectory("graft-part-sink")
+    val sink = sinkRoot.resolve("states").toString
+    def drop(name: String, lines: String*): Unit =
+      Files.writeString(src.resolve(name), lines.mkString("\n") + "\n")
+    def run(): Unit = Ingest.ingestNewFiles(spark, src.toString,
+      Ingest.statesSchema, Ingest.statesKey,
+      Seq(col("cases").asc),
+      checkpoint, sink)
+    // full byte-level snapshot of one partition directory: name → content
+    def snapshot(dir: JPath): Map[String, Seq[Byte]] =
+      Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString ->
+          Files.readAllBytes(p).toSeq).toMap
+
+    drop("day1.csv",
+      "date,state,fips,cases,deaths",
+      "2020-03-15,Washington,53,904,48",
+      "2020-03-15,Oregon,41,30,1")
+    run()
+    val day1Dir = JPath.of(sink, "date=2020-03-15")
+    assert(Files.isDirectory(day1Dir), "sink must be date-partitioned")
+    val before = snapshot(day1Dir)
+    assert(before.nonEmpty)
+
+    // second firing touches ONLY 2020-03-16: the 03-15 partition must not
+    // be re-listed/rewritten — its files stay byte-identical
+    drop("day2.csv",
+      "date,state,fips,cases,deaths",
+      "2020-03-16,Washington,53,1000,52")
+    run()
+    assert(snapshot(day1Dir) == before,
+      "untouched partition was rewritten — merge is not partition-pruned")
+    val all = spark.read.parquet(sink)
+    assert(all.count() == 3)
+
+    // third firing conflicts inside 03-16 only: 03-15 still byte-identical,
+    // 03-16 existing row wins (ON CONFLICT DO NOTHING semantics)
+    drop("day2b.csv",
+      "date,state,fips,cases,deaths",
+      "2020-03-16,Washington,53,9999,99",
+      "2020-03-16,Idaho,16,5,0")
+    run()
+    assert(snapshot(day1Dir) == before)
+    val day2 = spark.read.parquet(sink)
+      .filter(col("date") === "2020-03-16")
+    assert(day2.count() == 2)
+    assert(day2.filter(col("cases") === 1000)
+      .count() == 1) // existing row won
+  }
+
+  test("ingest skips _- and .-prefixed drop files until they are renamed visible") {
+    val src = Files.createTempDirectory("graft-hidden-src")
+    val checkpoint = Files.createTempDirectory("graft-hidden-ckpt").toString
+    val sink = Files.createTempDirectory("graft-hidden-sink")
+      .resolve("states").toString
+    def drop(name: String, line: String): Unit =
+      Files.writeString(src.resolve(name),
+        s"date,state,fips,cases,deaths\n$line\n")
+    def run(): Seq[Any] = Ingest.ingestNewFiles(spark, src.toString,
+      Ingest.statesSchema, Ingest.statesKey, Seq(col("cases").asc),
+      checkpoint, sink)
+    def states(): Set[String] = spark.read.parquet(sink).select("state")
+      .collect().map(_.getString(0)).toSet
+
+    drop("day1.csv", "2020-03-15,Washington,53,904,48")
+    drop("_partial.csv", "2020-03-16,Oregon,41,30,1")
+    drop(".x.csv", "2020-03-17,Idaho,16,5,0")
+    assert(run().map(_.toString) == Seq("2020-03-15"))
+    assert(states() == Set("Washington"))
+    assert(run().isEmpty) // hidden files stay out on a rerun too
+
+    Files.move(src.resolve("_partial.csv"), src.resolve("partial.csv"))
+    assert(run().map(_.toString) == Seq("2020-03-16"))
+    assert(states() == Set("Washington", "Oregon"))
+    assert(run().isEmpty)
+  }
+
+  test("fixture drive: the ingest sink hash-matches its batch twin") {
+    // The DuckDB oracle can't see the firing's sink; this is the
+    // hash-grade substitute: replay the FULL events fixture through the
+    // file-ledger ingest (3 "cron firings" + injected key conflicts) and
+    // require the final sink to hash-match the batch pipeline over the
+    // same inputs — columns sorted by name, rows sorted, md5: the gate's
+    // comparison.
+    import org.apache.spark.sql.types._
+    def canonHash(df: org.apache.spark.sql.DataFrame): String = {
+      val cols = df.columns.sorted
+        .map(c => coalesce(col(c).cast("string"), lit("␀")))
+      df.select(concat_ws("|", cols: _*).as("r"))
+        .agg(md5(concat_ws(",", sort_array(collect_list(col("r"))))))
+        .head().getString(0)
+    }
+
+    val evSchema = StructType(Seq(
+      StructField("date", DateType), StructField("event_id", LongType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType)))
+    val evRows = Tables.events(spark, sf)
+      .select(date_format(to_date(col("ts")), "yyyy-MM-dd").as("d"),
+        col("event_id"), col("user_id"), col("event_type"), col("value"))
+      .orderBy(col("event_id")).collect()
+    def lineOf(r: org.apache.spark.sql.Row): String =
+      s"${r.getString(0)},${r.getLong(1)},${r.getLong(2)}," +
+        s"${r.getString(3)},${r.getDouble(4)}"
+    val chunks = evRows.grouped((evRows.length + 2) / 3).toSeq
+    // firing 3 re-sends 50 firing-1 keys with value+1000 under a marker
+    // type: the STORED row must win (ON CONFLICT DO NOTHING), which is
+    // also the batch tiebreak's (value asc) winner
+    val dupLines = chunks.head.take(50).map(r =>
+      s"${r.getString(0)},${r.getLong(1)},${r.getLong(2)},dup," +
+        s"${r.getDouble(4) + 1000.0}")
+    val src = Files.createTempDirectory("graft-fd-src")
+    val ckpt = Files.createTempDirectory("graft-fd-ckpt").toString
+    val sink = Files.createTempDirectory("graft-fd-sink")
+      .resolve("events").toString
+    val firings = Seq(chunks(0).map(lineOf), chunks(1).map(lineOf),
+      chunks(2).map(lineOf) ++ dupLines)
+    firings.zipWithIndex.foreach { case (ls, i) =>
+      Files.writeString(src.resolve(s"firing$i.csv"),
+        ("date,event_id,user_id,event_type,value" +: ls).mkString("\n") + "\n")
+      Ingest.ingestNewFiles(spark, src.toString, evSchema,
+        Seq("event_id"), Seq(col("value").asc), ckpt, sink)
+    }
+    val ingested = spark.read.parquet(sink)
+    val batchTwin = Ingest.dedupKeepFirst(
+      spark.read.schema(evSchema).option("header", "true")
+        .option("dateFormat", "yyyy-MM-dd").csv(src.toString),
+      Seq("event_id"), Seq(col("value").asc))
+    assert(ingested.count() == evRows.length.toLong)
+    assert(ingested.filter(col("event_type") === "dup").count() == 0,
+      "a replayed conflict row displaced its stored winner")
+    assert(canonHash(ingested) == canonHash(batchTwin),
+      "ingest sink diverges from the batch pipeline")
+  }
+
+  test("a null or unparseable date fails the firing before it publishes or records a file") {
+    // PERMISSIVE reads a malformed date as NULL, which has no partition:
+    // each firing must throw, naming the unseen files, with no publish,
+    // no afterPublish and no ledger commit, until the files are fixed
+    val src = Files.createTempDirectory("graft-nulldate-src")
+    val ckpt = Files.createTempDirectory("graft-nulldate-ckpt").toString
+    val sink = Files.createTempDirectory("graft-nulldate-sink")
+      .resolve("states").toString
+    def drop(name: String, lines: String*): Unit =
+      Files.writeString(src.resolve(name),
+        ("date,state,fips,cases,deaths" +: lines).mkString("\n") + "\n")
+    var mirrored = Seq.empty[Any]
+    def run(): Seq[Any] = Ingest.ingestNewFiles(spark, src.toString,
+      Ingest.statesSchema, Ingest.statesKey, Seq(col("cases").asc),
+      ckpt, sink, afterPublish = touched => mirrored ++= touched)
+    def failing(files: String*): Unit = {
+      val e = intercept[RuntimeException](run())
+      files.foreach(f => assert(e.getMessage.contains(f), e.getMessage))
+      assert(!Files.exists(Paths.get(sink)), "a firing with a null date published")
+      assert(mirrored.isEmpty)
+    }
+
+    drop("a.csv", "2020-03-15,Washington,53,904,48", "bad-date,Oregon,41,30,1")
+    failing("a.csv")
+    drop("b.csv", "bad-date,Idaho,16,5,0")
+    failing("a.csv", "b.csv")
+    drop("c.csv", "nodate,Utah,49,7,0") // a file with no valid date at all
+    failing("a.csv", "b.csv", "c.csv")
+
+    // fixed in place: the next firing ingests every row of all three
+    drop("a.csv", "2020-03-15,Washington,53,904,48", "2020-03-15,Oregon,41,30,1")
+    drop("b.csv", "2020-03-16,Idaho,16,5,0")
+    drop("c.csv", "2020-03-16,Utah,49,7,0")
+    assert(run().map(_.toString).sorted == Seq("2020-03-15", "2020-03-16"))
+    assert(mirrored.map(_.toString).sorted == Seq("2020-03-15", "2020-03-16"))
+    assert(spark.read.parquet(sink).select("state").collect()
+      .map(_.getString(0)).toSet == Set("Washington", "Oregon", "Idaho", "Utah"))
+    assert(!Files.exists(Paths.get(sink, "date=__HIVE_DEFAULT_PARTITION__")))
+    assert(run().isEmpty)
   }
 }

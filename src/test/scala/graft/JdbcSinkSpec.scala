@@ -45,8 +45,8 @@ class JdbcSinkSpec extends AnyFunSuite {
   }
 
   private def dedupedStates(src: String) =
-    Ingest.dedupKeepFirst(Ingest.readStates(spark, src), Ingest.statesKey,
-      Seq(col("cases").asc, col("deaths").asc))
+    Ingest.dedupKeepFirst(Ingest.readCsv(spark, Ingest.statesSchema, src),
+      Ingest.statesKey, Seq(col("cases").asc, col("deaths").asc))
 
   private def day(d: String) = java.sql.Date.valueOf(d)
 
@@ -75,10 +75,11 @@ class JdbcSinkSpec extends AnyFunSuite {
     JdbcSink.replaceDates(cleaned, url, "states", touched)
     val viaJdbc = table("states")
 
-    // parquet path over the same source
+    // parquet path over the same source: one firing into a fresh sink
     val sink = Files.createTempDirectory("graft-jdbc-pq").resolve("states")
-    Ingest.ingest(spark, src, Ingest.statesSchema, Ingest.statesKey,
-      Seq(col("cases").asc, col("deaths").asc), sink.toString)
+    Ingest.ingestNewFiles(spark, src, Ingest.statesSchema, Ingest.statesKey,
+      Seq(col("cases").asc, col("deaths").asc),
+      Files.createTempDirectory("graft-jdbc-ckpt").toString, sink.toString)
     val viaParquet = spark.read.parquet(sink.toString)
 
     val first = canon(viaJdbc)

@@ -60,7 +60,7 @@ class SinkMaintenanceSpec extends AnyFunSuite {
       .resolve("states").toString
     def drop(name: String, lines: String*): Unit =
       Files.writeString(src.resolve(name), lines.mkString("\n") + "\n")
-    def run(): Unit = ops.Streaming.ingestAvailableNow(spark, src.toString,
+    def run(): Unit = ops.Ingest.ingestNewFiles(spark, src.toString,
       ops.Ingest.statesSchema, ops.Ingest.statesKey,
       Seq(col("cases").asc), checkpoint, sink)
 

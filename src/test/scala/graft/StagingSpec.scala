@@ -34,7 +34,7 @@ class StagingSpec extends AnyFunSuite {
       .takeWhile(_.hasNext).map(_.next().getFileName.toString).toList
     assert(names == List("us-states.csv"))
     // the staged file is directly ingestible
-    val df = Ingest.readStates(spark, staged("us-states.csv"))
+    val df = Ingest.readCsv(spark, Ingest.statesSchema, staged("us-states.csv"))
     assert(df.count() == 1)
     assert(df.head().getLong(3) == 904L)
   }
