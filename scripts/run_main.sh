@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Run a graft main directly on the compiled classes — no sbt, no project
-# lock, so long drives (Verify replays, StressGen) can run in the
+# lock, so long drives (Verify replays, index and firing drives) can run in the
 # background while sbt compiles/tests in the foreground. Compile first
 # (`sbt compile`); this script does NOT rebuild.
 #

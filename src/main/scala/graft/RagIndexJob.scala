@@ -128,6 +128,10 @@ object RagIndexJob {
         "qa")
   }
 
+  /** Files in the global bucket-sorted layout that build, compaction and
+    * retune write; more live files than this is append debt. */
+  private val LayoutFiles = 8
+
   private def writeSlice(indexed: DataFrame, indexRoot: String,
       mode: String, files: Int): Unit =
     indexed.repartitionByRange(files, col("bucket"))
@@ -167,12 +171,12 @@ object RagIndexJob {
     * root and swap it in whole — the index and manifest change together
     * or not at all. */
   private def publishRoot(spark: SparkSession, indexRoot: String,
-      index: DataFrame, planes: Int, files: Int): Unit = {
+      index: DataFrame, planes: Int): Unit = {
     import spark.implicits._
     val fs = rootFs(spark, indexRoot)
     val staging = new Path(indexRoot + "__staging")
     fs.delete(staging, true)
-    writeSlice(index, staging.toString, "overwrite", files)
+    writeSlice(index, staging.toString, "overwrite", LayoutFiles)
     Seq((planes, Dim)).toDF("planes", "dim")
       .write.mode("overwrite").parquet(s"$staging/manifest.parquet")
     PartitionSwap.swapDir(fs, staging, new Path(indexRoot))
@@ -183,35 +187,26 @@ object RagIndexJob {
     * file/row-group pruning (each append made every probed bucket touch
     * one more file set). One bucket-range shuffle of the index — the
     * scheduled companion job, run between (never during) update
-    * firings. Returns (files before, files after); a no-op below
-    * `maxFiles` debt. */
-  def compact(spark: SparkSession, indexRoot: String,
-      maxFiles: Int = 8, targetFiles: Int = 8): (Int, Int) = {
+    * firings. Returns (files before, files after); a no-op until the
+    * index holds more than `LayoutFiles` files. */
+  def compact(spark: SparkSession, indexRoot: String): (Int, Int) = {
     recoverRoot(spark, indexRoot)
     val before = indexDataFiles(spark, indexRoot)
-    if (before <= maxFiles) return (before, before)
+    if (before <= LayoutFiles) return (before, before)
     publishRoot(spark, indexRoot,
       spark.read.parquet(s"$indexRoot/index.parquet"),
-      manifestPlanes(spark, indexRoot), targetFiles)
+      manifestPlanes(spark, indexRoot))
     (before, indexDataFiles(spark, indexRoot))
-  }
-
-  /** True when the corpus has grown (or shrunk) past the manifest's
-    * pinned plane count — the rebuild trigger: stale planes mean each
-    * bucket holds ~2× the target rows per missing plane, degrading
-    * lookup cost, while too many planes starve buckets and hurt recall. */
-  def needsRetune(spark: SparkSession, indexRoot: String): Boolean = {
-    recoverRoot(spark, indexRoot)
-    SimOps.planesFor(
-      spark.read.parquet(s"$indexRoot/index.parquet").count()) !=
-      manifestPlanes(spark, indexRoot)
   }
 
   /** Re-tune the plane count to the grown corpus WITHOUT the source
     * documents: the index stores every chunk's vector, so re-bucketing
     * is one scan of the index itself (re-chunking and re-encoding 100 TB
     * of source text would be the expensive path; this is O(index)).
-    * Returns the new plane count, or None if already tuned. */
+    * Stale planes leave each bucket ~2× the target rows per missing
+    * plane, degrading lookup cost, while too many planes starve buckets
+    * and hurt recall. Returns the new plane count, or None if already
+    * tuned. */
   def retunePlanes(spark: SparkSession, indexRoot: String)
       : Option[Int] = {
     recoverRoot(spark, indexRoot)
@@ -222,7 +217,7 @@ object RagIndexJob {
       publishRoot(spark, indexRoot,
         idx.drop("bucket")
           .withColumn("bucket", SimOps.bucketExpr(target)),
-        target, files = 8)
+        target)
       Some(target)
     }
   }
@@ -230,23 +225,12 @@ object RagIndexJob {
   /** Scheduled maintenance policy: retune if the plane count drifted (a
     * retune rewrites the global layout, subsuming compaction), else
     * compact if append debt accumulated, else nothing. Returns what it
-    * did.
-    *
-    * `allowRetune = false` is the recall-sensitive mode the sf1ish
-    * lifecycle drive motivated (BASELINE.md round 11): on clone-heavy
-    * corpora near-identical vectors concentrate into shared buckets, so
-    * a retune narrows candidate sets far less than the plane math
-    * promises while still splitting near-dup neighborhoods across the
-    * new hyperplanes (measured: single-probe recall@10 0.57 → 0.45).
-    * Compaction is recall-neutral (pure layout), so a serve fleet that
-    * prefers recall can cap maintenance at compact-only and absorb the
-    * larger buckets with multi-probe lookups. */
-  def maintain(spark: SparkSession, indexRoot: String,
-      maxFiles: Int = 8, allowRetune: Boolean = true): String =
-    (if (allowRetune) retunePlanes(spark, indexRoot) else None) match {
+    * did: `retuned:<planes>`, `compacted:<before>-><after>` or `noop`. */
+  def maintain(spark: SparkSession, indexRoot: String): String =
+    retunePlanes(spark, indexRoot) match {
       case Some(p) => s"retuned:$p"
       case None =>
-        val (before, after) = compact(spark, indexRoot, maxFiles)
+        val (before, after) = compact(spark, indexRoot)
         if (after < before) s"compacted:$before->$after" else "noop"
     }
 
@@ -264,7 +248,7 @@ object RagIndexJob {
     val planes = SimOps.planesFor(nUnique)
     writeSlice(
       encodeChunks(unique).withColumn("bucket", SimOps.bucketExpr(planes)),
-      indexRoot, "overwrite", files = 8)
+      indexRoot, "overwrite", LayoutFiles)
     unique.unpersist()
     Seq((planes, Dim)).toDF("planes", "dim")
       .write.mode("overwrite").parquet(s"$indexRoot/manifest.parquet")

@@ -1266,17 +1266,31 @@ object ExtOps {
     GROUP BY 1 ORDER BY 1"""
 
   // ---- q89: z-order clustering keys (2-D locality audit) ---------------
-  // The Morton key of SinkMaintenance.zOrderKey as an auditable
-  // query: orders map to a 12-bit (custkey, order-day) grid, the Morton
-  // key interleaves the two coordinates, and per z-range bucket the
-  // query reports both dimensions' min/max spans. The z-order locality
-  // guarantee is visible in the output: the top 6 bits of z hold 3 bits
-  // of EACH coordinate, so every one of the 64 buckets spans ≤ 512 in x
-  // AND ≤ 512 in y — a single-column sort bounds only its own column
-  // and leaves the other's span at the full 4096 domain. Pure integer
-  // shift/mask arithmetic on both engines. SinkMaintenanceSpec proves
-  // the file-level effect (two-column predicates decode fewer row
-  // groups from a z-ordered layout than a one-column-sorted one).
+  // The Morton key of zOrderKey as an auditable query: orders map to a
+  // 12-bit (custkey, order-day) grid, the Morton key interleaves the two
+  // coordinates, and per z-range bucket the query reports both
+  // dimensions' min/max spans. The z-order locality guarantee is visible
+  // in the output: the top 6 bits of z hold 3 bits of EACH coordinate,
+  // so every one of the 64 buckets spans ≤ 512 in x AND ≤ 512 in y — a
+  // single-column sort bounds only its own column and leaves the other's
+  // span at the full 4096 domain. Pure integer shift/mask arithmetic on
+  // both engines.
+
+  /** Morton (z-order) key: interleave the low `bits` bits of two
+    * non-negative long columns — bit i of x lands at position 2i, bit i
+    * of y at 2i+1. Consecutive z values stay close in BOTH dimensions,
+    * so sorting by z gives every parquet row group a bounded min/max
+    * range on x AND y simultaneously: a two-column predicate prunes
+    * groups where a single-column sort only bounds its own column (the
+    * other's span per group stays the full domain). Pure shift/mask
+    * arithmetic — codegen-friendly, and expressible identically in the
+    * DuckDB oracle. */
+  private def zOrderKey(x: Column, y: Column, bits: Int = 12): Column =
+    (0 until bits).map { i =>
+      shiftleft(shiftright(x, i).bitwiseAND(lit(1L)), 2 * i) +
+        shiftleft(shiftright(y, i).bitwiseAND(lit(1L)), 2 * i + 1)
+    }.reduce(_ + _)
+
   def q89ZOrderStats(s: SparkSession, d: String): DataFrame = {
     val epoch = to_date(lit("1970-01-01"))
     val grid = Tables.orders(s, d).select(
@@ -1284,7 +1298,7 @@ object ExtOps {
       (datediff(col("o_orderdate").cast("date"), epoch) % 4096)
         .cast("long").as("y"))
     grid
-      .withColumn("z", SinkMaintenance.zOrderKey(col("x"), col("y"), 12))
+      .withColumn("z", zOrderKey(col("x"), col("y"), 12))
       .withColumn("zbucket", expr(s"z div ${1 << 18}"))
       .groupBy(col("zbucket"))
       .agg(count(lit(1)).as("n"),

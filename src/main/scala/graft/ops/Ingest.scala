@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,9 +108,17 @@ object Ingest {
     * [[appendIdempotent]], so overlapping rows across files dedup exactly
     * like ON CONFLICT. A firing with no unseen files runs no Spark job.
     *
+    * A visible drop file is immutable: a correction lands under a new
+    * name. The ledger records each ingested file's length and
+    * modification time, and every firing, idle ones included, compares
+    * them with its listing; if a recorded file changed, the firing throws
+    * before it reads anything, naming the files, and publishes and
+    * records nothing. Ledger lines written before lengths and times were
+    * recorded hold a bare name and are not checked.
+    *
     * Scale contract — O(batch), not O(history): the sink is laid out as
-    * `sinkPath/<partitionCol>=<value>/` and each firing merges ONLY the
-    * partitions whose values appear in its batch. The existing side is
+    * `sinkPath/date=<value>/` and each firing merges ONLY the
+    * partitions whose dates appear in its batch. The existing side is
     * read with the feed's `schema` (no schema-inference job) through a
     * partition-pruned filter, the merge shuffles O(batch + affected
     * partitions) rows, and publication is a per-partition-directory
@@ -131,45 +139,49 @@ object Ingest {
     * of this function is not read: the first firing on it merges every
     * file of the drop dir once, which changes no row.
     *
-    * `partitionCol` must be non-null in the source (the reference's
-    * schema marks the NYT feeds' `date` NOT NULL, schema.sql). A row whose
-    * value is blank or unparseable fails the firing before its publish,
-    * naming the unseen files; the reference also fails its job on an
-    * unparseable date (.kt:52-61).
+    * `date` must be non-null in the source (the reference's schema marks
+    * the NYT feeds' `date` NOT NULL, schema.sql). A row whose value is
+    * blank or unparseable fails the firing before its publish, naming the
+    * unseen files; the reference also fails its job on an unparseable
+    * date (.kt:52-61).
     *
-    * Returns the distinct partition values this firing merged, so
-    * downstream mirrors can stay O(batch) too by touching only those
-    * partitions.
+    * Returns the distinct dates this firing merged, so downstream mirrors
+    * can stay O(batch) too by touching only those partitions.
     */
   def ingestNewFiles(spark: SparkSession, srcDir: String,
                      schema: StructType, keys: Seq[String], tiebreak: Seq[Column],
                      checkpoint: String, sinkPath: String,
-                     partitionCol: String = "date",
                      afterPublish: Seq[Any] => Unit = _ => ()): Seq[Any] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val ledger = new Path(checkpoint, "ledger")
     val ledgerFs = ledger.getFileSystem(conf)
     val (version, seen) = FileLedger.read(ledgerFs, ledger)
     val src = new Path(srcDir)
-    val unseen = src.getFileSystem(conf).listStatus(src).filter(_.isFile).map(_.getPath)
-      .filter(p => visible(p.getName) && !seen(p.getName))
+    val listed = src.getFileSystem(conf).listStatus(src)
+      .filter(f => f.isFile && visible(f.getPath.getName))
+    val rewritten = listed.filter(f => seen.get(f.getPath.getName).flatten
+      .exists(_ != FileLedger.stamp(f)))
+    if (rewritten.nonEmpty)
+      sys.error("ingested drop files changed in place (a correction needs a " +
+        s"new name): ${rewritten.map(_.getPath).mkString(", ")}")
+    val unseen = listed.filter(f => !seen.contains(f.getPath.getName))
     val sink = new Path(sinkPath)
     val fs = sink.getFileSystem(conf) // sinkPath's OWN filesystem
     // heal any half-done swap a previous crash left behind
     PartitionSwap.recover(fs, sink)
     if (unseen.isEmpty) return Nil
-    val batch = readCsv(spark, schema, unseen.map(_.toString).toSeq: _*).persist()
+    val batch = readCsv(spark, schema, unseen.map(_.getPath.toString).toSeq: _*).persist()
     val touched = try {
       // the partitions this batch touches — O(#distinct values in batch),
       // a handful of values, NOT a scan of the sink
-      val touched = batch.select(col(partitionCol)).distinct().collect()
+      val touched = batch.select(col(PartitionCol)).distinct().collect()
         .map(_.get(0)).toSeq
       // a blank or malformed value reads as NULL (PERMISSIVE): it has no
       // partition to merge into, so fail before anything is published and
       // leave the files unrecorded until they are fixed
       if (touched.contains(null))
-        sys.error(s"null or unparseable $partitionCol in " +
-          s"${unseen.mkString(", ")}: nothing published")
+        sys.error(s"null or unparseable $PartitionCol in " +
+          s"${unseen.map(_.getPath).mkString(", ")}: nothing published")
       if (touched.nonEmpty) {
         // read ONLY the affected partitions: the isin filter on the
         // partition column prunes the scan to the affected `date=` dirs.
@@ -179,7 +191,7 @@ object Ingest {
         val existing =
           if (fs.exists(sink))
             spark.read.schema(schema).parquet(sinkPath)
-              .filter(col(partitionCol).isin(touched: _*))
+              .filter(col(PartitionCol).isin(touched: _*))
           else spark.createDataFrame(new java.util.ArrayList[Row](), batch.schema)
         val merged = appendIdempotent(existing, batch, keys, tiebreak)
         // write-then-swap (parquet can't overwrite its own input): the
@@ -188,45 +200,61 @@ object Ingest {
         val staging = new Path(sinkPath + "__staging")
         fs.delete(staging, true)
         merged.write.mode("overwrite")
-          .partitionBy(partitionCol).parquet(staging.toString)
-        PartitionSwap.publish(fs, staging, sink, partitionCol)
+          .partitionBy(PartitionCol).parquet(staging.toString)
+        PartitionSwap.publish(fs, staging, sink, PartitionCol)
         afterPublish(touched)
       }
       touched
     } finally batch.unpersist()
-    FileLedger.commit(ledgerFs, ledger, version + 1, seen ++ unseen.map(_.getName))
+    FileLedger.commit(ledgerFs, ledger, version + 1,
+      seen ++ unseen.map(f => f.getPath.getName -> Some(FileLedger.stamp(f))))
     touched
   }
+
+  /** The sink's partition column: every NYT feed is partitioned by date. */
+  private val PartitionCol = "date"
 
   /** The file source's hidden-file rule: committer/temp names (`_x`,
     * `.x`) and in-flight `hadoop fs -put` copies are not feed files. */
   private def visible(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".") && !name.endsWith("._COPYING_")
 
-  /** A feed's ingested file names, as numbered snapshots under one dir:
-    * the highest number is the ledger. [[commit]] writes the next number
-    * aside under a hidden name and renames it into place (a rename never
-    * overwrites), then drops older snapshots, so a reader sees the old or
-    * the new snapshot whole. */
+  /** A feed's ingested files, as numbered snapshots under one dir: the
+    * highest number is the ledger, one `name<TAB>length<TAB>mtime` line
+    * per file (a bare name, from a ledger written before lengths and times
+    * were recorded, reads with no stamp). [[commit]] writes the next
+    * number aside under a hidden name and renames it into place (a rename
+    * never overwrites), then drops older snapshots, so a reader sees the
+    * old or the new snapshot whole. */
   private object FileLedger {
+    type Stamp = (Long, Long)
+
+    def stamp(f: FileStatus): Stamp = (f.getLen, f.getModificationTime)
+
     private def versions(fs: FileSystem, dir: Path): Seq[Long] =
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).map(_.getPath.getName)
         .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted.toSeq
 
-    def read(fs: FileSystem, dir: Path): (Long, Set[String]) =
-      versions(fs, dir).lastOption.fold((0L, Set.empty[String])) { v =>
+    def read(fs: FileSystem, dir: Path): (Long, Map[String, Option[Stamp]]) =
+      versions(fs, dir).lastOption.fold((0L, Map.empty[String, Option[Stamp]])) { v =>
         val in = fs.open(new Path(dir, v.toString))
         try (v, scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).toSet)
+          .filter(_.nonEmpty).map(line => line.split('\t') match {
+            case Array(name, len, mtime) => name -> Some((len.toLong, mtime.toLong))
+            case _ => line -> None
+          }).toMap)
         finally in.close()
       }
 
-    def commit(fs: FileSystem, dir: Path, version: Long, names: Set[String]): Unit = {
+    def commit(fs: FileSystem, dir: Path, version: Long,
+               files: Map[String, Option[Stamp]]): Unit = {
       val tmp = new Path(dir, s".$version.tmp")
       val out = fs.create(tmp, true)
-      try out.write(names.toSeq.sorted.map(_ + "\n").mkString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(files.toSeq.sortBy(_._1).map {
+          case (name, Some((len, mtime))) => s"$name\t$len\t$mtime\n"
+          case (name, None) => s"$name\n"
+        }.mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       if (!fs.rename(tmp, new Path(dir, version.toString)))
         sys.error(s"cannot commit ledger $tmp as version $version")

@@ -2,9 +2,10 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe publication of partition directories by rename swap — shared
-  * by the incremental ingest merge ([[Ingest.ingestNewFiles]]) and
-  * sink compaction ([[SinkMaintenance.compactPartitions]]).
+/** Crash-safe publication of directories by rename swap — shared by the
+  * NYT firing's partition merge ([[Ingest.ingestNewFiles]], per partition
+  * dir) and the retrieval index ([[graft.RagIndexJob]], whole root via
+  * [[swapDir]]).
   *
   * Protocol per partition dir `p`: rename(live/p → prevRoot/p);
   * rename(staging/p → live/p); delete(prevRoot/p). Backups live OUTSIDE
@@ -12,24 +13,28 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * partition discovery. Every intermediate state is recoverable:
   * [[recover]] restores any backup whose live dir is missing (crash
   * between the two renames) and drops backups whose live dir exists
-  * (crash after publish, before cleanup). Writers on the same sink must
-  * call [[recover]] before publishing — both call sites do.
+  * (crash after publish, before cleanup). A writer of the sink must call
+  * [[recover]] before publishing; the firing does.
   */
 private[graft] object PartitionSwap {
 
-  def prevRootFor(sinkPath: String): Path = new Path(sinkPath + "__prev")
+  private def prevRootFor(sinkPath: String): Path = new Path(sinkPath + "__prev")
 
   /** Heal a half-done WHOLE-DIRECTORY swap ([[swapDir]]). Idempotent;
     * every reader/writer of a swapped root must call this first. */
   def recoverDir(fs: FileSystem, live: Path): Unit = {
     val prev = prevRootFor(live.toString)
-    if (fs.exists(prev)) {
-      if (!fs.exists(live)) {
-        if (!fs.rename(prev, live))
-          sys.error(s"cannot restore $prev to $live")
-      } else fs.delete(prev, true)
-    }
+    if (fs.exists(prev)) restoreOrDrop(fs, prev, live)
   }
+
+  /** One recovery step: an existing `backup` is restored to `live` when
+    * `live` is missing (crash between the two renames), else dropped
+    * (crash after publish, before cleanup). */
+  private def restoreOrDrop(fs: FileSystem, backup: Path, live: Path): Unit =
+    if (!fs.exists(live)) {
+      if (!fs.rename(backup, live))
+        sys.error(s"cannot restore $backup to $live")
+    } else fs.delete(backup, true)
 
   /** Crash-safe publication of a whole directory: `staging` replaces
     * `live` via the same rename protocol as the per-partition swap
@@ -51,13 +56,8 @@ private[graft] object PartitionSwap {
   def recover(fs: FileSystem, sink: Path): Unit = {
     val prevRoot = prevRootFor(sink.toString)
     if (fs.exists(prevRoot)) {
-      fs.listStatus(prevRoot).foreach { st =>
-        val live = new Path(sink, st.getPath.getName)
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            sys.error(s"cannot restore ${st.getPath} to $live")
-        } else fs.delete(st.getPath, true)
-      }
+      fs.listStatus(prevRoot).foreach(st =>
+        restoreOrDrop(fs, st.getPath, new Path(sink, st.getPath.getName)))
       fs.delete(prevRoot, true)
     }
   }

@@ -959,7 +959,7 @@ object TextOps {
     // 0-based doc RANK via the bucketed prefix sum (CurationOps
     // .assignChunks with unit weights: `start` = docs before this one in
     // doc_id order): checkpoints follow DOC ORDER, not the id VALUE, so
-    // gapped/offset id spaces (StressGen's replica offsets, 1-based ids)
+    // gapped/offset id spaces (replicated corpora with offset keys, 1-based ids)
     // still yield ten corpus-prefix deciles — the id-value formula this
     // replaces degenerated there — and no single-partition rank window
     // ever plans.

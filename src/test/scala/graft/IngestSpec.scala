@@ -483,6 +483,60 @@ class IngestSpec extends AnyFunSuite {
     assert(run().isEmpty)
   }
 
+  test("a drop file rewritten in place after its ingest fails every firing until it is restored") {
+    import java.nio.file.attribute.FileTime
+    import scala.jdk.CollectionConverters._
+    val src = Files.createTempDirectory("graft-rewrite-src")
+    val ckpt = Files.createTempDirectory("graft-rewrite-ckpt")
+    val sink = Files.createTempDirectory("graft-rewrite-sink").resolve("states")
+    def drop(name: String, line: String): Unit =
+      Files.writeString(src.resolve(name), s"date,state,fips,cases,deaths\n$line\n")
+    def run(): Seq[Any] = Ingest.ingestNewFiles(spark, src.toString,
+      Ingest.statesSchema, Ingest.statesKey, Seq(col("cases").asc),
+      ckpt.toString, sink.toString)
+    def snapshot(dir: Path): Map[String, Seq[Byte]] =
+      Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    // the firing throws naming a.csv, and neither the sink nor the ledger
+    // changes
+    def rejected(): Unit = {
+      val (sinkBefore, ckptBefore) = (snapshot(sink), snapshot(ckpt))
+      val e = intercept[RuntimeException](run())
+      assert(e.getMessage.contains("a.csv"), e.getMessage)
+      assert(snapshot(sink) == sinkBefore && snapshot(ckpt) == ckptBefore)
+    }
+    val a = src.resolve("a.csv")
+
+    drop("a.csv", "2020-03-15,Washington,53,904,48")
+    assert(run().map(_.toString) == Seq("2020-03-15"))
+    val ingestedAt = Files.getLastModifiedTime(a)
+    // a correction rewritten under the same name: the idle firing and a
+    // firing with a new file both throw before they read anything
+    drop("a.csv", "2020-03-15,Washington,53,1000,50")
+    rejected()
+    drop("b.csv", "2020-03-16,Oregon,41,30,1")
+    rejected()
+    // the recorded bytes and time back in place: b.csv ingests
+    drop("a.csv", "2020-03-15,Washington,53,904,48")
+    Files.setLastModifiedTime(a, ingestedAt)
+    assert(run().map(_.toString) == Seq("2020-03-16"))
+    // a same-length rewrite is caught by its moved modification time
+    drop("a.csv", "2020-03-15,Washington,53,905,48")
+    Files.setLastModifiedTime(a,
+      FileTime.fromMillis(ingestedAt.toMillis + 60000L))
+    rejected()
+    assert(spark.read.parquet(sink.toString).select("cases").collect()
+      .map(_.getLong(0)).toSet == Set(904L, 30L))
+    // a ledger line holding a bare name (the format before stamps)
+    // records nothing to compare: a next ledger version of bare names
+    val versions = Files.list(ckpt.resolve("ledger")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.forall(_.isDigit)).toSeq
+    assert(versions.size == 1)
+    Files.writeString(ckpt.resolve(s"ledger/${versions.head.toLong + 1}"),
+      "a.csv\nb.csv\n")
+    assert(run().isEmpty)
+  }
+
   test("fixture drive: the ingest sink hash-matches its batch twin") {
     // The DuckDB oracle can't see the firing's sink; this is the
     // hash-grade substitute: replay the FULL events fixture through the

@@ -148,7 +148,7 @@ class RagIndexJobSpec extends AnyFunSuite {
       .collect()(0).getAs[String]("chunk_text")
     val hitsBefore = RagIndexJob.lookup(spark, dir, q1, 5).collect().toSeq
     val contentBefore = digest(dir)
-    val (before, after) = RagIndexJob.compact(spark, dir, maxFiles = 8)
+    val (before, after) = RagIndexJob.compact(spark, dir)
     assert(before == fragmented && after <= 8 && after < before,
       s"compact $before->$after")
     // byte-identical serving: same rows, same order, same cosines
@@ -161,14 +161,18 @@ class RagIndexJobSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("bucket"))
     // compaction is idempotent: second call is a no-op
-    assert(RagIndexJob.compact(spark, dir, maxFiles = 8) == (after, after))
+    assert(RagIndexJob.compact(spark, dir) == (after, after))
   }
 
   test("retunePlanes re-buckets from the index's own vectors when the corpus outgrows the pin") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("rag-retune").toString
     val (_, u0, p0) = RagIndexJob.build(spark, sf, dir)
-    assert(!RagIndexJob.needsRetune(spark, dir))
+    def manifestPlanes(): Int = spark.read.parquet(s"$dir/manifest.parquet")
+      .collect()(0).getAs[Int]("planes")
+    // freshly built: tuned and laid out, nothing to maintain
+    assert(RagIndexJob.maintain(spark, dir) == "noop")
+    assert(manifestPlanes() == p0)
     // grow the corpus past the next power-of-two bucket-count boundary:
     // planesFor(n) = clamped ceil(log2(ceil(n/32))), so from u0≈1350
     // (p=6) the pin drifts once unique chunks exceed 2048 — 600 novel
@@ -181,22 +185,15 @@ class RagIndexJobSpec extends AnyFunSuite {
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$batch/documents.parquet")
     assert(RagIndexJob.update(spark, batch, dir) > 0L)
-    assert(RagIndexJob.needsRetune(spark, dir),
-      s"planes did not drift (u0=$u0, p0=$p0)")
     val probe = spark.read.parquet(s"$dir/index.parquet")
       .filter(col("doc_id") === 920005L).orderBy(col("chunk_idx"))
       .collect()(0).getAs[String]("chunk_text")
-    // recall-sensitive mode: with retune disallowed, maintenance still
-    // clears the append debt (compaction is recall-neutral layout work)
-    // but leaves the pinned planes — and so the drift — alone
-    val guarded = RagIndexJob.maintain(spark, dir, allowRetune = false)
-    assert(guarded.startsWith("compacted:"), guarded)
-    assert(RagIndexJob.indexDataFiles(spark, dir) <= 8)
-    assert(RagIndexJob.needsRetune(spark, dir),
-      "compact-only maintenance must not silently retune")
-    val pNew = RagIndexJob.maintain(spark, dir)
-    assert(pNew.startsWith("retuned:"), pNew)
-    assert(!RagIndexJob.needsRetune(spark, dir))
+    val retuned = RagIndexJob.maintain(spark, dir)
+    assert(retuned.startsWith("retuned:"),
+      s"planes did not drift (u0=$u0, p0=$p0): $retuned")
+    val p = retuned.stripPrefix("retuned:").toInt
+    assert(p != p0)
+    assert(manifestPlanes() == p)
     // manifest and index moved together: the new planes serve correctly
     val hits = RagIndexJob.lookup(spark, dir, probe, 3).collect()
     assert(hits(0).getAs[Long]("doc_id") == 920005L)
@@ -305,7 +302,7 @@ class RagIndexJobSpec extends AnyFunSuite {
     })
     assert(RagIndexJob.update(spark, grow, dir) > 0L)
     assertServesLikeReference(dir, "update")
-    val (before, after) = RagIndexJob.compact(spark, dir, maxFiles = 8)
+    val (before, after) = RagIndexJob.compact(spark, dir)
     assert(after < before, s"compact $before->$after")
     assertServesLikeReference(dir, "compact")
     assert(RagIndexJob.retunePlanes(spark, dir).exists(_ != p0))
